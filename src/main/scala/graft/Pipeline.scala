@@ -1,7 +1,8 @@
 package graft
 
+import scala.util.Failure
 import org.apache.spark.sql.SparkSession
-import graft.analyze.Analyzers
+import graft.analyze.{AnalyzerRunner, Analyzers}
 import graft.ingest.{Extract, WorkloadViews}
 import graft.process.JsonlProcess
 
@@ -14,11 +15,14 @@ import graft.process.JsonlProcess
   *                                     (collect.py: REST poll → JSON.gz per query)
   *   extract <queryInfoDir> <outDir>   (extract.py: QueryInfo JSON → summary)
   *   analyze <summaryPath> <outDir> [--filter NAME] [--limit N] [--fail-on-error]
-  *                                     (analyze.py: 28 analyzer tables + metrics;
+  *                                     (analyze.py: 28 analyzer tables + metrics,
+  *                                      the analyzers run concurrently;
   *                                      --filter runs exactly one analyzer,
   *                                      --limit keeps the first N summaries,
-  *                                      --fail-on-error aborts on the first
-  *                                      analyzer failure instead of isolating it)
+  *                                      --fail-on-error aborts with the first
+  *                                      failure in name order, once every
+  *                                      analyzer has finished, instead of
+  *                                      isolating it)
   *   process <summaryPath> <outDir> [--rename-user] [--rename-schemas]
   *           [--rename-catalogs] [--remove-locations] [--remove-query]
   *           [--filter-user NAME] [--filter-schema NAME] [--hash-tokens]
@@ -32,7 +36,8 @@ import graft.process.JsonlProcess
   *                                      key-based rows/2-part-name parity path)
   *   report <summaryPath> <out.html|out.zip> [--colorblind]
   *                                     (self-contained HTML with inline SVG
-  *                                      charts, zip-wrapped when the target
+  *                                      charts, the 28 sections computed
+  *                                      concurrently, zip-wrapped when the target
   *                                      ends in .zip; --colorblind swaps the
   *                                      palette like the reference's option)
   *   curate <docsDir> <outDir> [--min-quality Q] [--benchmark DIR]
@@ -223,22 +228,20 @@ object Pipeline {
       val only = rest.sliding(2).collectFirst {
         case List("--filter", n) => n
       }
-      val selected = Analyzers.all(views).toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.forall(_ == name) }
-      var written = 0
-      selected.foreach { case (name, f) =>
-        try {
-          val df = f()
-          df.coalesce(1).write.mode("overwrite").parquet(s"$out/$name")
-          written += 1
-        } catch {
-          // per-analyzer isolation (analyze.py:1269-1272) unless
-          // `--fail-on-error` (analyze.py:1213) asks the whole run to abort
-          case e: Exception if !rest.contains("--fail-on-error") =>
-            System.err.println(s"[analyze] $name failed: ${e.getMessage}")
-        }
+      // every selected analyzer runs concurrently, each isolated: a failure
+      // is reported and the others still write (analyze.py:1269-1272);
+      // `--fail-on-error` (analyze.py:1213) aborts the run with the first
+      // failure in name order once all of them have finished
+      val results = AnalyzerRunner.run(Analyzers.all(views)
+          .filter { case (name, _) => only.forall(_ == name) }) { (name, df) =>
+        df.coalesce(1).write.mode("overwrite").parquet(s"$out/$name")
       }
-      println(s"wrote $written/${selected.size} analyzer tables to $out")
+      val failures = results.collect { case (name, Failure(e)) => name -> e }
+      failures.foreach { case (name, e) =>
+        System.err.println(s"[analyze] $name failed: ${e.getMessage}")
+      }
+      if (rest.contains("--fail-on-error")) failures.headOption.foreach(f => throw f._2)
+      println(s"wrote ${results.size - failures.size}/${results.size} analyzer tables to $out")
       spark.stop()
 
     case "process" :: in :: out :: opts =>

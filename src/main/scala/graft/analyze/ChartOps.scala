@@ -49,7 +49,11 @@ object ChartOps {
     * collect, so repeated pie calls (an analyze run renders 9) never
     * accumulate InMemoryRelations; a direct caller of THIS method owns
     * the cache lifetime itself (use [[pieDistributedCached]] to get the
-    * handle).
+    * handle). Concurrent calls (the analyzers run concurrently, see
+    * [[AnalyzerRunner]]) each cache and unpersist their own plan: the
+    * nine pie analyzers aggregate different keys or values, so no two of
+    * them cache the same plan and one call's unpersist never drops
+    * another's cache.
     */
   private[graft] def pieDistributed(counts: DataFrame, keyCol: String,
       valueCol: String, top: Int): DataFrame =

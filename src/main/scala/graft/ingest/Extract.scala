@@ -99,6 +99,11 @@ object Extract {
   * `joins` are exploded/joined once and reused by all 28 analyzers instead
   * of 28 rescans (the reference re-iterates its in-memory list per chart,
   * `analyze.py:1241-1248`).
+  *
+  * Safe to share between concurrently running analyzers
+  * ([[graft.analyze.AnalyzerRunner]]): a lazy view is initialized under
+  * this instance's monitor, so concurrent first readers block on, and
+  * then share, ONE build and ONE cached relation of each view.
   */
 final class WorkloadViews private (val summaries: DataFrame) {
 

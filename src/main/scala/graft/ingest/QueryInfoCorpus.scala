@@ -1,5 +1,7 @@
 package graft.ingest
 
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
 /** Deterministic synthetic QueryInfo corpus — the ingest-stage pricing
   * input the bench never had (round 20, the r19 verdict's ask #1). The
   * reference workload is stage 2 (`extract.py:123-167`) run over 5-15
@@ -319,23 +321,46 @@ object QueryInfoCorpus {
 
   /** Write the corpus (idempotent, marker-guarded, parallel): one
     * `q<i>.json.gz` per document. Returns the corpus directory.
+    *
+    * Safe across JVMs sharing the directory: the corpus is generated into
+    * a sibling temp directory and published with one atomic rename, so
+    * `dir` only ever exists complete (with its `_SUCCESS` marker). A JVM
+    * that loses the race discards its copy and uses the winner's.
     */
   def ensure(dir: String = defaultDir, nDocs: Int = NDocs): String = synchronized {
-    val d = new java.io.File(dir)
-    val marker = new java.io.File(d, "_SUCCESS")
-    if (marker.exists()) return dir
-    if (d.exists()) { // partial previous attempt: rebuild from scratch
-      d.listFiles().foreach(_.delete())
-    }
-    d.mkdirs()
-    java.util.stream.LongStream.range(0L, nDocs.toLong).parallel().forEach { i =>
-      val bytes = documentBytes(i).getBytes("UTF-8")
-      val f = new java.io.File(d, f"q$i%05d.json.gz")
-      val out = new java.util.zip.GZIPOutputStream(
-        new java.io.BufferedOutputStream(new java.io.FileOutputStream(f), 1 << 16))
-      try out.write(bytes) finally out.close()
-    }
-    java.nio.file.Files.writeString(marker.toPath, s"$nDocs\n")
+    val d = Paths.get(dir).toAbsolutePath
+    if (Files.exists(d.resolve("_SUCCESS"))) return dir
+    Files.createDirectories(d.getParent)
+    val tmp = Files.createTempDirectory(d.getParent, s"${d.getFileName}.tmp")
+    try {
+      java.util.stream.LongStream.range(0L, nDocs.toLong).parallel().forEach { i =>
+        val bytes = documentBytes(i).getBytes("UTF-8")
+        val f = tmp.resolve(f"q$i%05d.json.gz").toFile
+        val out = new java.util.zip.GZIPOutputStream(
+          new java.io.BufferedOutputStream(new java.io.FileOutputStream(f), 1 << 16))
+        try out.write(bytes) finally out.close()
+      }
+      Files.writeString(tmp.resolve("_SUCCESS"), s"$nDocs\n")
+      publish(tmp, d)
+    } finally deleteFlat(tmp)
     dir
+  }
+
+  /** Atomically renames the complete corpus `tmp` to `d`. When `d` is
+    * already complete another JVM won the race and `tmp` is left for the
+    * caller to discard; an incomplete `d` (left by a writer that did not
+    * publish atomically) is deleted and the rename retried once.
+    */
+  private[graft] def publish(tmp: Path, d: Path, retry: Boolean = true): Unit =
+    try Files.move(tmp, d, StandardCopyOption.ATOMIC_MOVE) catch {
+      case _: java.io.IOException if Files.exists(d.resolve("_SUCCESS")) =>
+      case _: java.io.IOException if retry => deleteFlat(d); publish(tmp, d, retry = false)
+    }
+
+  /** Deletes a directory of plain files, if it exists. */
+  private def deleteFlat(p: Path): Unit = {
+    val f = p.toFile
+    Option(f.listFiles()).foreach(_.foreach(_.delete()))
+    f.delete()
   }
 }

@@ -2,7 +2,7 @@ package graft.report
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{NumericType, StructType, TimestampType}
-import graft.analyze.Analyzers
+import graft.analyze.{AnalyzerRunner, Analyzers}
 import graft.ingest.WorkloadViews
 
 /** Stage 3 presentation (reference `analyze.py:1253-1292` + the HTML
@@ -215,9 +215,6 @@ object Report {
     s"<table><thead><tr>$header</tr></thead><tbody>\n$body\n</tbody></table>"
   }
 
-  /** Full report HTML from the derived views. `colorblind` mirrors the
-    * reference's palette switch (`analyze.py:708-713`).
-    */
   /** Suffix-dispatched artifact sink, the reference CLI's `-o` contract
     * (`analyze.py:1284-1292`): a target ending `.zip` wraps the rendered
     * HTML as a single DEFLATE `output.html` entry — the reference's
@@ -242,35 +239,47 @@ object Report {
     } else throw new IllegalArgumentException(
       s"unsupported output file extension: $out (want .html or .zip)")
 
-  def render(views: WorkloadViews, colorblind: Boolean = false): String = {
+  /** Full report HTML from the derived views. `colorblind` mirrors the
+    * reference's palette switch (`analyze.py:708-713`).
+    *
+    * The 28 sections and the header metrics are computed concurrently
+    * ([[AnalyzerRunner]]) and assembled in analyzer-name order, so the
+    * artifact is byte-identical across runs whatever order the analyzers
+    * finish in. A failing analyzer renders as its own `failed:` section.
+    */
+  def render(views: WorkloadViews, colorblind: Boolean = false): String =
+    render(views, colorblind, Analyzers.all(views))
+
+  /** [[render]] over an explicit analyzer registry. */
+  private[graft] def render(views: WorkloadViews, colorblind: Boolean,
+      analyzers: Map[String, () => DataFrame]): String = {
     val palette = if (colorblind) Colorblind8 else Category10
-    val m: Row = Analyzers.metrics(views).collect()(0)
+    val header = AnalyzerRunner.fork("metrics")(Analyzers.metrics(views).collect()(0))
+    val sections = AnalyzerRunner.run(analyzers) { (name, df) =>
+      // one Spark job per analyzer: collect 101 rows, derive emptiness
+      // and truncation from that instead of a separate count()
+      val rows = df.limit(101).collect()
+      if (rows.isEmpty) "<p class=\"empty\">not enough data</p>" // analyze.py:1250-1251
+      else {
+        val svg = chart(name, df.schema, rows.take(100), palette)
+        // per-analyzer export links (reference parity: Bokeh's toolbar
+        // save button + the CSV the analyzer notebook exports). Static
+        // markup — the JS shell serializes the rendered table / SVG on
+        // click, so the artifact stays one self-contained byte-stable
+        // file with no data duplicated into data: URIs.
+        val dl = s"""<div class="dl"><a href="#" class="dl-csv">⬇ data (csv)</a>""" +
+          (if (svg.nonEmpty) """ <a href="#" class="dl-png">⬇ chart (png)</a>""" else "") +
+          "</div>"
+        dl + svg + table(df.columns, rows.take(100)) +
+          (if (rows.length > 100) "<p class='empty'>(first 100 rows)</p>" else "")
+      }
+    }.map { case (name, body) =>
+      val html = body.fold(e => s"<p class=\"empty\">failed: ${esc(e.getMessage)}</p>", identity)
+      s"""<section><h2 id="${esc(name)}">${esc(name)}</h2>\n$html\n</section>"""
+    }.mkString("\n")
+    val m: Row = header().get
     val metricCells = m.schema.fields.zipWithIndex.map { case (f, i) =>
       s"""<div class="metric"><span>${esc(f.name)}</span><b>${esc(fmt(m.get(i)))}</b></div>"""
-    }.mkString("\n")
-    val sections = Analyzers.all(views).toSeq.sortBy(_._1).map { case (name, f) =>
-      val body =
-        try {
-          // one Spark job per analyzer: collect 101 rows, derive emptiness
-          // and truncation from that instead of a separate count()
-          val df = f()
-          val rows = df.limit(101).collect()
-          if (rows.isEmpty) "<p class=\"empty\">not enough data</p>" // analyze.py:1250-1251
-          else {
-            val svg = chart(name, df.schema, rows.take(100), palette)
-            // per-analyzer export links (reference parity: Bokeh's toolbar
-            // save button + the CSV the analyzer notebook exports). Static
-            // markup — the JS shell serializes the rendered table / SVG on
-            // click, so the artifact stays one self-contained byte-stable
-            // file with no data duplicated into data: URIs.
-            val dl = s"""<div class="dl"><a href="#" class="dl-csv">⬇ data (csv)</a>""" +
-              (if (svg.nonEmpty) """ <a href="#" class="dl-png">⬇ chart (png)</a>""" else "") +
-              "</div>"
-            dl + svg + table(df.columns, rows.take(100)) +
-              (if (rows.length > 100) "<p class='empty'>(first 100 rows)</p>" else "")
-          }
-        } catch { case e: Exception => s"<p class=\"empty\">failed: ${esc(e.getMessage)}</p>" }
-      s"""<section><h2 id="${esc(name)}">${esc(name)}</h2>\n$body\n</section>"""
     }.mkString("\n")
     s"""<!DOCTYPE html>
        |<html><head><meta charset="utf-8"><title>Workload analysis</title>

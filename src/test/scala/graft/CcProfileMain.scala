@@ -61,7 +61,11 @@ object CcProfileMain {
     spark.stop()
   }
 }
-// scratch latency probe appended during r22 investigation (deleted before commit)
+/** Per-job and per-stage latency probe of `Components.minLabel` over the
+  * hamming pairs of `args(0)` (default sf0.1): two passes, each job's and
+  * stage's duration printed to stderr. Not library surface; run via
+  * `Test/runMain graft.CcLoopJobsMain`.
+  */
 object CcLoopJobsMain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"

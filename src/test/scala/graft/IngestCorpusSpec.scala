@@ -94,4 +94,23 @@ class IngestCorpusSpec extends AnyFunSuite {
     assert(Set("hive", "iceberg", "delta", "jmx", "memory").subsetOf(prefixes),
       s"missing handle shapes: got $prefixes")
   }
+
+  test("ensure publishes atomically: a partial directory is replaced, a winner is kept") {
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("qi_corpus")
+    val d = root.resolve("corpus")
+    def names(p: java.nio.file.Path) = p.toFile.list().toSeq.sorted
+    // a directory without _SUCCESS (an interrupted writer) is replaced
+    Files.createDirectories(d)
+    Files.writeString(d.resolve("junk"), "x")
+    assert(QueryInfoCorpus.ensure(d.toString, 3) === d.toString)
+    assert(names(d) === Seq("_SUCCESS", "q00000.json.gz", "q00001.json.gz", "q00002.json.gz"))
+    assert(names(root) === Seq("corpus"), "no temp sibling left behind")
+    // losing the rename to another JVM's complete corpus keeps the winner's
+    val loser = Files.createDirectory(root.resolve("loser"))
+    Files.writeString(loser.resolve("_SUCCESS"), "99\n")
+    QueryInfoCorpus.publish(loser, d)
+    assert(Files.readString(d.resolve("_SUCCESS")) === "3\n")
+    assert(Files.exists(loser), "the loser's copy is left for its caller to discard")
+  }
 }

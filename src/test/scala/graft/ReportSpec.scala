@@ -1,5 +1,6 @@
 package graft
 
+import graft.analyze.{AnalyzerRunner, Analyzers}
 import graft.ingest.WorkloadViews
 import graft.queries.AnalyzerGates
 import graft.report.Report
@@ -163,6 +164,64 @@ class ReportSpec extends SparkSpec {
     assert(countSvg(cb) === countSvg(default))
     assert(default.contains("#1f77b4") && !default.contains("#0072b2"))
     assert(cb.contains("#0072b2") && !cb.contains("#1f77b4"))
+  }
+
+  test("analyzer runner: concurrent, results in name order whatever order they finish") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import scala.jdk.CollectionConverters._
+    // c finishes first, then b, then a: each analyzer waits for the next
+    // name to finish, so a serial runner would stall on "a" and fail
+    val done = Seq("a", "b", "c").map(_ -> new CountDownLatch(1)).toMap
+    val finished = new ConcurrentLinkedQueue[String]()
+    def analyzer(after: Option[String]) = () => {
+      after.foreach(n => assert(done(n).await(60, TimeUnit.SECONDS), s"$n never finished"))
+      spark.range(1).toDF()
+    }
+    val results = AnalyzerRunner.run(Map(
+        "a" -> analyzer(Some("b")), "b" -> analyzer(Some("c")), "c" -> analyzer(None))) {
+      (name, df) =>
+        df.collect()
+        finished.add(name)
+        done(name).countDown()
+        name
+    }
+    assert(finished.asScala.toSeq === Seq("c", "b", "a"))
+    assert(results.map { case (n, r) => (n, r.get) } === Seq("a" -> "a", "b" -> "b", "c" -> "c"))
+  }
+
+  test("a throwing analyzer renders its own failed: section and the others still render") {
+    val v = views
+    val boom = """<section><h2 id="aaa_boom">aaa_boom</h2>""" +
+      "\n<p class=\"empty\">failed: boom</p>\n</section>\n"
+    val html = Report.render(v, colorblind = false,
+      Analyzers.all(v) + ("aaa_boom" -> (() => throw new IllegalStateException("boom"))))
+    assert(html.contains(boom))
+    // every other section is exactly what the plain report renders
+    assert(html.replace(boom, "") === Report.render(v))
+  }
+
+  test("every report job carries the caller's job group") {
+    import scala.jdk.CollectionConverters._
+    // the bench attributes jobs to layers by job group; the runner's
+    // threads must inherit the caller's group at call time
+    val v = views
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup("report-spec", "analyzer runner job group")
+    try {
+      Report.render(v)
+      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+    assert(groups.size > Analyzers.all(v).size, "one job per analyzer and the header, at least")
+    assert(groups.asScala.toSet === Set("report-spec"))
   }
 
   private def countSvg(html: String): Int = "<svg".r.findAllIn(html).size
