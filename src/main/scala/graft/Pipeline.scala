@@ -238,7 +238,7 @@ object Pipeline {
       }
       val failures = results.collect { case (name, Failure(e)) => name -> e }
       failures.foreach { case (name, e) =>
-        System.err.println(s"[analyze] $name failed: ${e.getMessage}")
+        System.err.println(s"[analyze] $name failed: ${AnalyzerRunner.message(e)}")
       }
       if (rest.contains("--fail-on-error")) failures.headOption.foreach(f => throw f._2)
       println(s"wrote ${results.size - failures.size}/${results.size} analyzer tables to $out")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Stable fingerprint of a gate's physical plan — the mechanical "did the
   * plan drift?" signal. bench_details.json records one per gate next to
@@ -19,9 +19,12 @@ import org.apache.spark.sql.DataFrame
   */
 object PlanFingerprint {
 
-  def of(df: DataFrame): String = {
+  def of(df: DataFrame): String = digest(planString(df))
+
+  /** MD5 of the normalized rendering of one or more plans. */
+  private[graft] def digest(plan: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(normalize(planString(df))
+    md.digest(normalize(plan)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map(b => f"${b & 0xff}%02x").mkString
   }
@@ -34,14 +37,18 @@ object PlanFingerprint {
     * characters and fingerprint differently. Render untruncated (confs
     * restored after), normalize, and the string is id-width-independent.
     */
-  private[graft] def planString(df: DataFrame): String = {
-    val conf = df.sparkSession.conf
+  private[graft] def planString(df: DataFrame): String =
+    untruncated(df.sparkSession)(df.queryExecution.executedPlan.toString)
+
+  /** Runs `render` with the session's plan-string truncation off. */
+  private[graft] def untruncated(spark: SparkSession)(render: => String): String = {
+    val conf = spark.conf
     val metaKey = "spark.sql.maxMetadataStringLength"
     val fieldsKey = "spark.sql.debug.maxToStringFields"
     val (oldMeta, oldFields) = (conf.get(metaKey), conf.get(fieldsKey))
     conf.set(metaKey, "100000")
     conf.set(fieldsKey, "10000")
-    try df.queryExecution.executedPlan.toString
+    try render
     finally { conf.set(metaKey, oldMeta); conf.set(fieldsKey, oldFields) }
   }
 

@@ -39,6 +39,11 @@ object AnalyzerRunner {
     }
   }
 
+  /** A failed analyzer's message for a `failed:` line: the exception's
+    * message, or its class name when the message is null (an NPE's, say).
+    */
+  def message(e: Throwable): String = Option(e.getMessage).getOrElse(e.getClass.getName)
+
   /** Builds each analyzer's DataFrame and applies `use` to it, all
     * analyzers concurrently; returns once every one has finished, in
     * analyzer-name order whatever order they finished in. A failing

@@ -183,7 +183,9 @@ object Analyzers {
       .orderBy(col("query_id"), col("input_rows"), col("output_rows"))
 
   /** Top-5 tables by Σ wall of ScanFilter ops, then the per-op points
-    * (B22 `analyze.py:747-834`; left-semi membership, `:810`).
+    * (B22 `analyze.py:747-834`; membership in the top 5, `:810`). The ≤ 5
+    * names come back to the driver and enter the plan as an `isin`
+    * literal list (`table_name` is never null, see `WorkloadViews.scans`).
     */
   private def topTablePoints(v: WorkloadViews): DataFrame = {
     val pts = v.scanOps("ScanFilter")
@@ -191,8 +193,8 @@ object Analyzers {
       .withColumn("selectivity", col("output_rows").cast("double") / col("input_rows"))
     val top5 = pts.groupBy(col("table_name")).agg(sum(col("wall")).as("w"))
       .orderBy(col("w").desc, col("table_name")).limit(5)
-      .select(col("table_name"))
-    pts.join(broadcast(top5), Seq("table_name"), "left_semi")
+      .select(col("table_name")).collect().map(_.getString(0))
+    pts.filter(col("table_name").isin(top5.toSeq: _*))
   }
 
   /** B22 (advisory line: selectivity 1e-2). */

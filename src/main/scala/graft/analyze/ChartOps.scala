@@ -6,10 +6,14 @@ import org.apache.spark.sql.functions._
 /** The two reusable chart-data reductions (SURVEY §2.A17/A18).
   *
   * Both end in tiny results (≤ a few dozen rows) but start from
-  * workload-sized inputs. Scale discipline: anything touching the
-  * unbounded input (totals, top-k, remainder sums) runs as distributed
-  * aggregates / TakeOrdered / broadcast joins; partition-less windows are
-  * only ever applied to the ≤ top-row result set.
+  * workload-sized inputs. Scale discipline: bounded driver hops, no
+  * broadcasts. Anything touching the unbounded input (totals, top-k,
+  * remainder sums) runs as a distributed aggregate or TakeOrdered; what
+  * comes back to the driver is bounded at any corpus size (≤ `top` rows
+  * or one row) and enters later plans as literals, never as a broadcast
+  * join. No partition-less window runs over the input. Over a
+  * single-partition input (a small workload, see
+  * [[graft.ingest.WorkloadViews]]) every plan here is one stage.
   */
 object ChartOps {
 
@@ -34,68 +38,6 @@ object ChartOps {
     java.math.BigDecimal.valueOf(v * 100.0)
       .setScale(0, java.math.RoundingMode.HALF_EVEN).doubleValue() / 100.0
 
-  /** Distributed part of [[pie]] — everything that touches the
-    * workload-sized input: per-key aggregate, scalar total, TakeOrdered
-    * top-(top-1), remainder anti-join. Emits ≤ `top` rows
-    * (key, value, is_rest) in output order. Package-visible so
-    * PlanShapeSpec pins THIS plan (TakeOrdered, broadcast anti-join, no
-    * partition-less window); the judged gates' own plans are the bounded
-    * driver-side tail over these rows.
-    *
-    * Cache ownership: the cached per-key aggregate is vocabulary-bounded
-    * (users, operator types, table names — never raw rows) and is
-    * consumed by three sub-plans of the single collect (total broadcast,
-    * top-k, anti-join remainder). [[pie]] unpersists it right after that
-    * collect, so repeated pie calls (an analyze run renders 9) never
-    * accumulate InMemoryRelations; a direct caller of THIS method owns
-    * the cache lifetime itself (use [[pieDistributedCached]] to get the
-    * handle). Concurrent calls (the analyzers run concurrently, see
-    * [[AnalyzerRunner]]) each cache and unpersist their own plan: the
-    * nine pie analyzers aggregate different keys or values, so no two of
-    * them cache the same plan and one call's unpersist never drops
-    * another's cache.
-    */
-  private[graft] def pieDistributed(counts: DataFrame, keyCol: String,
-      valueCol: String, top: Int): DataFrame =
-    pieDistributedCached(counts, keyCol, valueCol, top)._1
-
-  /** [[pieDistributed]] plus the cached per-key aggregate it pins, so the
-    * caller can unpersist after consuming the result.
-    */
-  private[graft] def pieDistributedCached(counts: DataFrame, keyCol: String,
-      valueCol: String, top: Int): (DataFrame, DataFrame) = {
-    // pre-aggregate by key: callers pass per-key aggregates (unique keys,
-    // identity here), and a duplicate key can then never fall between the
-    // kept set and the anti-joined remainder and silently lose its mass
-    val base = counts
-      .select(col(keyCol).cast("string").as("key"), col(valueCol).cast("double").as("value"))
-      .groupBy(col("key")).agg(sum(col("value")).as("value"))
-      .cache()
-    // scalar total broadcast to every row — never a single-partition window
-    // over the (unbounded) per-key aggregate
-    val total = base.agg(sum(col("value")).as("total")).filter(col("total") =!= 0.0)
-    // "first top-1 entries in desc order" plans as TakeOrderedAndProject:
-    // each partition forwards its local top-(top-1), no global sort.
-    val kept = base
-      .orderBy(col("value").desc, col("key")).limit(top - 1)
-      .crossJoin(broadcast(total))
-      .filter(col("value") * 100.0 / col("total") > 0.1)
-      .select(col("key"), col("value"), lit(0L).as("is_rest"))
-    // the remainder is summed directly (reference: values[~relevant].sum()),
-    // via a broadcast anti-join against the ≤19 kept keys — null-SAFE
-    // equality, or a kept NULL key would also be counted into the rest;
-    // the crossJoin with the (possibly empty) total relation keeps the
-    // reference's all-zero bail-out (`if not sum_values: return`,
-    // analyze.py:463-464)
-    val keptKeys = kept.select(col("key").as("kept_key"))
-    val rest = base.join(broadcast(keptKeys), col("key") <=> col("kept_key"), "left_anti")
-      .crossJoin(broadcast(total))
-      .groupBy().agg(sum(col("value")).as("value"))
-      .filter(col("value").isNotNull)
-      .select(lit("All the rest").as("key"), col("value"), lit(1L).as("is_rest"))
-    (kept.unionAll(rest), base)
-  }
-
   /** `pie_chart` (`analyze.py:460-515`): input = (key, value) rows.
     * Ranked desc by value (ties by key, matching Python's stable sort over
     * the key-sorted groupby); keep the first `top-1` entries with share
@@ -105,51 +47,64 @@ object ChartOps {
     *
     * Output: (key, value, pct), kept rows first (desc), rest last.
     *
-    * The ≤top assembled rows come back to the driver in ONE collect and
-    * the pct tail (rounding, Σ==100 residual, output order) is computed
-    * there: the former distributed tail was four more scheduling rounds
-    * (tails agg → flagged broadcast → sumRound agg → final) whose cost on
-    * a small fixture was pure job latency — measured 4.3 s warm on a
-    * 23 kB input, dominated by scheduling, not the plan. The driver hop
-    * is bounded at ≤ top rows at ANY corpus size (TakeOrdered output plus
-    * one remainder row), so this is chart-tail assembly, not a
-    * driver-side loop over data. Bit-compatibility with the former tail:
-    * kept is a single TakeOrdered partition and rest a single row, so the
-    * old partition-ordered partial-sum merges equal the driver's left
-    * folds in row order, and [[npRound2]] runs the same BigDecimal
-    * HALF_EVEN rounding `bround` executed.
+    * Plan: the input is pre-aggregated by key and cached (callers pass
+    * per-key aggregates, so this is identity on their keys, and a
+    * duplicate key can never fall between the kept set and the remainder;
+    * the cache is vocabulary-bounded: users, operator types, table names).
+    * Three bounded collects read it, each a global aggregate or a
+    * TakeOrdered, with no join, window or broadcast:
+    *  1. the scalar total, no row when it is null or 0 (the reference's
+    *     all-zero bail-out, `if not sum_values: return`, `analyze.py:463-464`);
+    *  2. the TakeOrdered top-(top-1), with the share test (> 0.1% of the
+    *     total) evaluated in Spark, so NaN compares as Spark orders it;
+    *  3. the remainder as one scalar sum over the keys not kept, matched
+    *     by null-SAFE inequality (a kept NULL key must not be counted into
+    *     the rest as well), no row when nothing remains (reference:
+    *     `values[~relevant].sum()`).
+    * The cache is dropped before returning, so the nine pies of an
+    * analyze run never accumulate InMemoryRelations. Concurrent pies
+    * ([[AnalyzerRunner]]) aggregate different keys or values, so no two
+    * cache the same plan and one call's unpersist never drops another's.
+    *
+    * The pct tail (rounding, Σ==100 residual) runs on the driver over the
+    * ≤ top rows, bounded at any corpus size. It is bit-identical to a
+    * distributed tail: the folds run in output order and [[npRound2]]
+    * runs the BigDecimal HALF_EVEN rounding `bround` executes.
     */
   def pie(counts: DataFrame, keyCol: String, valueCol: String, top: Int = 20): DataFrame = {
     val spark = counts.sparkSession
     import spark.implicits._
-    val (dist, base) = pieDistributedCached(counts, keyCol, valueCol, top)
-    // one collect consumes all three cache readers; the cache has no
-    // value past it, so drop it here rather than at session teardown
-    val rows = try dist.collect() finally base.unpersist()
-    // output order: kept desc (value desc, key asc nulls-first), rest last
-    // — the collect already delivers this order (TakeOrdered partition
-    // then remainder row); the explicit sort just refuses to depend on it
-    val sorted = rows.sortWith { (a, b) =>
-      if (a.getLong(2) != b.getLong(2)) a.getLong(2) < b.getLong(2)
-      else if (a.getDouble(1) != b.getDouble(1)) a.getDouble(1) > b.getDouble(1)
-      else {
-        val (ka, kb) = (a.getString(0), b.getString(0))
-        if (ka == null) kb != null else if (kb == null) false else ka < kb
-      }
-    }
+    val base = counts
+      .select(col(keyCol).cast("string").as("key"), col(valueCol).cast("double").as("value"))
+      .groupBy(col("key")).agg(sum(col("value")).as("value"))
+      .cache()
+    val sorted: Seq[(String, Double)] = try {
+      base.agg(sum(col("value")).as("total")).filter(col("total") =!= 0.0)
+        .collect().headOption.toSeq.flatMap { total =>
+          // TakeOrderedAndProject: each partition forwards its local
+          // top-(top-1) and the driver merges them, in rank order
+          val kept = base.orderBy(col("value").desc, col("key")).limit(top - 1)
+            .select(col("key"), col("value"),
+              (col("value") * 100.0 / lit(total.getDouble(0)) > 0.1).as("keep"))
+            .collect().toSeq.filter(r => !r.isNullAt(2) && r.getBoolean(2))
+            .map(r => (r.getString(0), r.getDouble(1)))
+          val notKept = kept.foldLeft(lit(true))((c, k) => c && !(col("key") <=> lit(k._1)))
+          val rest = base.filter(notKept).agg(sum(col("value"))).collect()(0)
+          kept ++ (if (rest.isNullAt(0)) Nil else Seq(("All the rest", rest.getDouble(0))))
+        }
+    } finally base.unpersist()
     if (sorted.isEmpty) Seq.empty[(String, Double, Double)].toDF("key", "value", "pct")
     else {
-      val totalV = sorted.foldLeft(0.0)((acc, r) => acc + r.getDouble(1))
-      val pctRound = sorted.map(r => npRound2(r.getDouble(1) * 100.0 / totalV))
+      val totalV = sorted.foldLeft(0.0)((acc, r) => acc + r._2)
+      val pctRound = sorted.map(r => npRound2(r._2 * 100.0 / totalV))
       val sumRound = pctRound.foldLeft(0.0)(_ + _)
       // the LAST row in output order absorbs the rounding residual so
       // Σ == 100 exactly (analyze.py:474-476)
-      val out = sorted.zipWithIndex.map { case (r, i) =>
+      sorted.zipWithIndex.map { case ((k, v), i) =>
         val pct = if (i == sorted.length - 1) pctRound(i) + (100.0 - sumRound)
           else pctRound(i)
-        (r.getString(0), r.getDouble(1), pct)
-      }
-      out.toSeq.toDF("key", "value", "pct")
+        (k, v, pct)
+      }.toDF("key", "value", "pct")
     }
   }
 
@@ -174,28 +129,30 @@ object ChartOps {
     val pts = points
       .select(col(selCol).cast("double").as("x"), col(weightCol).cast("double").as("w"))
       .filter(col("x").isNotNull && col("w").isNotNull)
-    // the reference bails out before padding when there are no points
-    // (analyze.py:633-634) — padding alone would divide by a zero total
-    if (pts.isEmpty)
+    // one collect of (count, Σw): the reference bails out before padding
+    // when there are no points (analyze.py:633-634) — padding alone would
+    // divide by a zero total — and the total enters the plan as a literal
+    val stats = pts.agg(count(lit(1)), sum(col("w"))).collect()(0)
+    if (stats.getLong(0) == 0L)
       return pts.select(lit("").as("label"), lit(0.0).as("pct")).limit(0)
+    val total = stats.getDouble(1)
     val binned = pts
       .withColumn("bin", abs(npRound(col("x") - lit(step / 2), 1)))
       .withColumn("label",
         when(col("bin") <= maxSelectivity + 1e-9, format_string("%.2f", col("bin")))
           .otherwise(lit("Above")))
-    // pad: arange(0, max, step) labeled directly (not re-binned)
+    // pad: arange(0, max, step) labeled directly (not re-binned); one
+    // slice, so a union with a single-partition input stays one partition
     val nPad = math.ceil(maxSelectivity / step - 1e-9).toInt
-    val pad = spark.range(0, nPad)
+    val pad = spark.range(0, nPad, 1, 1)
       .select(format_string("%.2f", col("id").cast("double") * lit(step)).as("label"),
         lit(0.0).as("w"))
     // percent per POINT then sum per label — the reference's aggregation
     // order (`wall = wall / wall.sum() * 100` at analyze.py:645, then
-    // groupby-sum), kept bit-compatible; the total is a broadcast scalar
-    // aggregate, never a single-partition window over raw points
-    val all = binned.select(col("label"), col("w")).unionAll(pad)
-    val total = all.agg(sum(col("w")).as("total"))
-    all.crossJoin(broadcast(total))
-      .withColumn("pct", col("w") / col("total") * 100.0)
+    // groupby-sum), kept bit-compatible (the zero pad weights leave the
+    // total unchanged); never a single-partition window over raw points
+    binned.select(col("label"), col("w")).unionAll(pad)
+      .withColumn("pct", col("w") / lit(total) * 100.0)
       .groupBy(col("label")).agg(sum(col("pct")).as("pct"))
       .orderBy(col("label"))
   }

@@ -100,6 +100,15 @@ object Extract {
   * of 28 rescans (the reference re-iterates its in-memory list per chart,
   * `analyze.py:1241-1248`).
   *
+  * Partitioning: [[base]] is cached in [[WorkloadViews.basePartitions]]
+  * partitions, the count AQE would coalesce a shuffle of the summary
+  * relation's size into. A small workload (the daily 100-document window)
+  * gets ONE partition: every view derived from it reports
+  * `SinglePartition`, so the analyzers' `groupBy`s, windows and sorts and
+  * the [[scans]] join need no exchange, and each chart runs as one-stage
+  * jobs ([[joins]] keeps its broadcast joins). A large workload keeps its
+  * scan parallelism and its exchanges.
+  *
   * Safe to share between concurrently running analyzers
   * ([[graft.analyze.AnalyzerRunner]]): a lazy view is initialized under
   * this instance's monitor, so concurrent first readers block on, and
@@ -109,12 +118,15 @@ final class WorkloadViews private (val summaries: DataFrame) {
 
   import WorkloadViews._
 
+  private val partitions = basePartitions(summaries)
+
   /** FAILED-filtered base (A28 — analysis side only, `analyze.py:1231-1235`),
     * with the query-id-derived event timestamp (`analyze.py:62-63`).
     */
   val base: DataFrame = summaries
     .filter(col("state") =!= "FAILED")
     .withColumn("ts", to_timestamp(substring(col("query_id"), 1, 15), "yyyyMMdd_HHmmss"))
+    .coalesce(partitions)
     .cache()
 
   /** One row per operator occurrence (A7). `op_idx` keeps the source array
@@ -155,15 +167,28 @@ final class WorkloadViews private (val summaries: DataFrame) {
       .filter(col("rn") === 1).drop("rn")
   }
 
-  /** Scan-ish operators joined to their plan node's deepest table (A21-A23,
-    * B18/B22-24). Broadcast hint: the deduped node side of one workload is
-    * small relative to operator occurrences.
+  /** Every `*Scan*` operator occurrence joined to its plan node's deepest
+    * table (A21-A23, B18/B22-24), `table_name` "" when the node has none.
+    * Cached once: eight analyzers read it through [[scanOps]]. Over a
+    * single-partition base both join sides are one partition, so the
+    * table side is hash-joined in place: no exchange, and no broadcast job.
     */
-  def scanOps(typeSubstring: String): DataFrame =
-    operators.filter(col("operator_type").contains(typeSubstring))
-      .join(nodesDeduped.select(col("query_id"), col("node_id"), col("deepest_table")),
+  lazy val scans: DataFrame = {
+    val tables = nodesDeduped.select(col("query_id"), col("node_id"), col("deepest_table"))
+    operators.filter(col("operator_type").contains("Scan"))
+      .join(if (partitions == 1) tables.hint("shuffle_hash") else tables,
         Seq("query_id", "node_id"), "left")
       .withColumn("table_name", coalesce(col("deepest_table"), lit("")))
+      .cache()
+  }
+
+  /** The [[scans]] rows whose operator type contains `typeSubstring`, which
+    * must itself contain "Scan" (a narrower family such as "ScanFilter").
+    */
+  def scanOps(typeSubstring: String): DataFrame = {
+    require(typeSubstring.contains("Scan"), s"not a scan operator family: $typeSubstring")
+    scans.filter(col("operator_type").contains(typeSubstring))
+  }
 
   /** Classified join sites (A24, `analyze.py:1040-1080`): per join/semijoin
     * plan node, the probe/build operator pair.
@@ -198,6 +223,11 @@ final class WorkloadViews private (val summaries: DataFrame) {
       col("operator_type").as("build_type"),
       col("input_size").as("build_input_size"),
       col("input_rows").as("build_input_rows"))
+    // planned as the default broadcast joins at any size: Spark keeps two
+    // single-partition join sides in place only while their size estimate
+    // is under `spark.sql.maxSinglePartitionBytes`, and the estimate of the
+    // first join's output (the product of its inputs') is not, so an
+    // in-place second join would be shuffled
     joinNodes
       .join(probe, Seq("query_id", "node_id", "probe_type"))
       .join(build, Seq("query_id", "node_id", "build_type"))
@@ -259,6 +289,33 @@ object WorkloadViews {
     graft.tables.Tables.driftAgainst(ExpectedSummary,
       org.apache.spark.sql.types.StructType(
         schema.fields.map(f => f.copy(dataType = asNullable(f.dataType)))))
+
+  /** Partitions for the cached [[WorkloadViews.base]]: the rule AQE
+    * applies when it coalesces shuffle output
+    * (`CoalesceShufflePartitions`), applied to the summary relation's
+    * size statistic and read from the session's own AQE confs. The target
+    * partition size is the advisory size, lowered to size / default
+    * parallelism under `parallelismFirst`, but never below the minimum
+    * partition size. A relation no larger than the target is one
+    * partition; `coalesce` never raises a scan's partition count, so a
+    * larger relation keeps its parallelism. The decision reads the
+    * relation's bytes, never its file or split count.
+    */
+  private[graft] def basePartitions(summaries: DataFrame): Int = {
+    import org.apache.spark.sql.internal.SQLConf
+    val spark = summaries.sparkSession
+    val conf = spark.sessionState.conf
+    val size = summaries.queryExecution.optimizedPlan.stats.sizeInBytes
+    val minParts =
+      if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
+        spark.sparkContext.defaultParallelism
+      else 1
+    val target = ((size + minParts - 1) / minParts)
+      .min(BigInt(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)))
+      .max(BigInt(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)))
+      .max(BigInt(1))
+    ((size + target - 1) / target).max(BigInt(1)).min(BigInt(Int.MaxValue)).toInt
+  }
 
   def apply(summaries: DataFrame): WorkloadViews = {
     summaryDrift(summaries.schema).foreach { d =>

@@ -101,12 +101,14 @@ object CoreQueries {
     NamedQuery(
       "topn_rollup_rest",
       (s, d) => {
-        // same dataflow as ChartOps.pie: the per-user aggregate is reduced
-        // by a scalar total (broadcast) + TakeOrderedAndProject top-19 —
-        // never a partition-less window or global row_number over the
-        // unbounded key set. The bounded (≤20-row) tail is window-free
-        // too: last-row detection and the rounding residual are scalar
-        // aggregates broadcast back in.
+        // one distributed plan: the per-user aggregate is reduced by a
+        // scalar total (broadcast) + TakeOrderedAndProject top-19, the
+        // remainder by a broadcast anti-join — never a partition-less
+        // window or global row_number over the unbounded key set. The
+        // bounded (≤20-row) tail is window-free too: last-row detection
+        // and the rounding residual are scalar aggregates broadcast back
+        // in. (ChartOps.pie computes the same chart in bounded collects
+        // with a driver-side tail.)
         val counts = Tables.events(s, d)
           .groupBy(col("user_id").cast("string").as("key"))
           .agg(count(lit(1)).as("value"))

@@ -207,7 +207,7 @@ object Report {
         val cell = esc(fmt(r.get(i)))
         if (i == pctIdx && r.get(i) != null) {
           val w = math.max(0.0, math.min(100.0, r.getDouble(i)))
-          s"""<td><div class="bar" style="width:${w}%"></div>$cell</td>"""
+          s"""<td><div class="bar" style="width:${f2(w)}%"></div>$cell</td>"""
         } else s"<td>$cell</td>"
       }.mkString
       s"<tr>$cells</tr>"
@@ -274,7 +274,7 @@ object Report {
           (if (rows.length > 100) "<p class='empty'>(first 100 rows)</p>" else "")
       }
     }.map { case (name, body) =>
-      val html = body.fold(e => s"<p class=\"empty\">failed: ${esc(e.getMessage)}</p>", identity)
+      val html = body.fold(e => s"<p class=\"empty\">failed: ${esc(AnalyzerRunner.message(e))}</p>", identity)
       s"""<section><h2 id="${esc(name)}">${esc(name)}</h2>\n$html\n</section>"""
     }.mkString("\n")
     val m: Row = header().get

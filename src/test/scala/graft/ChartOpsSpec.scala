@@ -21,24 +21,21 @@ class ChartOpsSpec extends SparkSpec {
     assert(kept === kept.sorted.reverse)
   }
 
-  test("pie leaves no cached relation behind (unpersists after its one collect)") {
+  test("pie leaves no cached relation behind (unpersists after its collects)") {
     import spark.implicits._
-    spark.catalog.clearCache()
-    val counts = (1 to 25).map(i => (s"k%02d".format(i), (100 - i).toDouble)).toDF("k", "v")
-    ChartOps.pie(counts, "k", "v").collect()
     // an analyze run renders 9 pies; without the unpersist each pinned its
     // per-key aggregate for the session — assert the cache registry is
-    // empty, not merely that some plan stopped using it
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "pie left an InMemoryRelation registered after returning")
-    // and the cache WAS live during the distributed consume (the helper
-    // hands the handle to the caller that owns it)
-    val (dist, base) = ChartOps.pieDistributedCached(counts, "k", "v", 20)
-    try {
-      dist.collect()
-      assert(base.storageLevel !== org.apache.spark.storage.StorageLevel.NONE)
-    } finally base.unpersist()
-    assert(spark.sharedState.cacheManager.isEmpty)
+    // empty, not merely that some plan stopped using it. Every exit is
+    // covered: the full path, the all-zero bail-out and an empty input.
+    val counts = (1 to 25).map(i => (s"k%02d".format(i), (100 - i).toDouble)).toDF("k", "v")
+    val zeros = Seq(("a", 0.0), ("b", 0.0)).toDF("k", "v")
+    for ((what, df, rows) <- Seq(("full", counts, 20), ("all-zero", zeros, 0),
+        ("empty", counts.limit(0), 0))) {
+      spark.catalog.clearCache()
+      assert(ChartOps.pie(df, "k", "v").collect().length === rows, what)
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$what: pie left an InMemoryRelation registered after returning")
+    }
   }
 
   test("pie: sub-0.1% keys are excluded from the top even when few keys") {

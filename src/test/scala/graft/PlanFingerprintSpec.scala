@@ -43,20 +43,20 @@ class PlanFingerprintSpec extends SparkSpec {
       n -> PlanFingerprint.of(df)
     } :+ {
       // the pie gates' judged plans end at the bounded driver tail, so
-      // drift in pieDistributed's workload-sized shape (TakeOrdered /
-      // broadcast anti-join / scalar total) is invisible to their
-      // fingerprints; pin it here for one representative pie input (the
-      // B25 operator-input pie's counts over the workload fixture)
+      // drift in the plans the pie runs over its workload-sized input
+      // (scalar total / TakeOrdered / remainder sum over the cached per-key
+      // aggregate) is invisible to their fingerprints; pin them here for
+      // one representative pie input (the B25 operator-input pie's counts
+      // over the workload fixture)
       spark.catalog.clearCache()
       val counts = graft.ingest
         .WorkloadViews(spark.read.parquet(graft.queries.AnalyzerGates.fixtureDir))
         .operators.groupBy(org.apache.spark.sql.functions.col("operator_type"))
         .agg(org.apache.spark.sql.functions.sum(
           org.apache.spark.sql.functions.col("input_size")).as("value"))
-      val (dist, base) = graft.analyze.ChartOps
-        .pieDistributedCached(counts, "operator_type", "value", 20)
-      try "_pie_distributed_operator_input" -> PlanFingerprint.of(dist)
-      finally base.unpersist()
+      val qes = executionsOf(graft.analyze.ChartOps.pie(counts, "operator_type", "value", 20))
+      "_pie_distributed_operator_input" -> PlanFingerprint.digest(PlanFingerprint
+        .untruncated(spark)(qes.map(_.executedPlan.toString).mkString("\n")))
     }
     if (sys.env.get("SPARK_GRAFT_REGEN_FINGERPRINTS").contains("1")) {
       Files.createDirectories(snapshot.getParent)

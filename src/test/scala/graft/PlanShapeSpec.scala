@@ -127,20 +127,81 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("Window"))
   }
 
-  test("pie: distributed part is TakeOrdered + broadcast anti-join, no window; gate tail is local") {
+  /** The exchanges of the plan that ran: AQE's final plans, down into the
+    * plans of the cached relations it read (an AQE plan string also prints
+    * the initial plan, whose exchanges the final plan may have dropped).
+    */
+  private def exchangesRun(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    p match {
+      case a: AdaptiveSparkPlanExec => exchangesRun(a.executedPlan)
+      case q: QueryStageExec => exchangesRun(q.plan)
+      case m: InMemoryTableScanExec => exchangesRun(m.relation.cachedPlan)
+      case e: Exchange => e.nodeName +: e.children.flatMap(exchangesRun)
+      case other => other.children.flatMap(exchangesRun)
+    }
+  }
+
+  test("pie: only TakeOrdered or global aggregates over the cached per-key aggregate") {
     import spark.implicits._
-    // the workload-sized part of the pie family (per-key aggregate →
-    // scalar total broadcast → TakeOrdered top-19 → broadcast anti-join
-    // remainder) — pinned HERE because the judged pie gates' own plans
-    // are now the bounded ≤20-row driver tail (one collect replaced the
-    // former four-job scheduling tail)
-    val counts = Seq(("a", 5.0), ("b", 3.0), ("c", 1.0)).toDF("k", "v")
-    val p = graft.analyze.ChartOps.pieDistributed(counts, "k", "v", 20)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("TakeOrderedAndProject(limit=19"))
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"))
-    assert(!p.contains("Window"))
+    // the workload-sized part of the pie family, pinned HERE because the
+    // judged pie gates' own plans are the bounded ≤20-row driver tail:
+    // three bounded collects (scalar total, TakeOrdered top-19, remainder
+    // sum) over one cached per-key aggregate — no join, no window, no
+    // broadcast; over a single-partition input, no exchange either
+    val counts = (1 to 25).map(i => (f"k$i%02d", (100 - i).toDouble)).toDF("k", "v").coalesce(1)
+    val qes = executionsOf(graft.analyze.ChartOps.pie(counts, "k", "v", 20))
+    val plans = qes.map(_.executedPlan.toString)
+    assert(plans.size === 3, plans.mkString("\n\n"))
+    assert(plans.count(_.contains("TakeOrderedAndProject(limit=19")) === 1)
+    assert(plans.count(_.contains("HashAggregate(keys=[], ")) === 2)
+    plans.foreach { p =>
+      assert(p.contains("InMemoryTableScan"), s"not over the cached aggregate:\n$p")
+      for (op <- Seq("Join", "Window", "BroadcastExchange"))
+        assert(!p.contains(op), s"$op in a pie plan:\n$p")
+    }
+    qes.foreach(qe => assert(exchangesRun(qe.executedPlan).isEmpty, qe.executedPlan.toString))
     assert(plan("analyzer_operator_input").contains("LocalTableScan"))
+  }
+
+  test("views: a small base is one partition and its analyzers run no exchange") {
+    import graft.analyze.Analyzers
+    import graft.ingest.WorkloadViews
+    val v = WorkloadViews(spark.read.parquet(graft.queries.AnalyzerGates.fixtureDir))
+    assert(v.base.rdd.getNumPartitions === 1)
+    // a grouped trend, a sorted scatter and the scan view's join: none needs
+    // an exchange or a broadcast
+    for (a <- Seq("scheduled_by_date", "peak_mem_by_query", "wall_by_selectivity_10",
+        "walltime_vs_selectivity")) {
+      val df = Analyzers.all(v)(a)()
+      df.collect()
+      val p = df.queryExecution.executedPlan
+      assert(exchangesRun(p).isEmpty, s"$a ran an exchange over a small base:\n$p")
+    }
+  }
+
+  test("views: a base forced large by the AQE size confs keeps its exchanges") {
+    import graft.analyze.Analyzers
+    import graft.ingest.WorkloadViews
+    val confs = Seq("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    val v = try {
+      confs.foreach(spark.conf.set(_, "1k"))
+      WorkloadViews(spark.read.parquet(graft.queries.AnalyzerGates.fixtureDir).repartition(2))
+    } finally confs.foreach(spark.conf.unset)
+    assert(v.base.rdd.getNumPartitions === 2)
+    for (a <- Seq("scheduled_by_date", "peak_mem_by_query")) {
+      val df = Analyzers.all(v)(a)()
+      df.collect()
+      val p = df.queryExecution.executedPlan
+      assert(exchangesRun(p).contains("Exchange"), s"$a lost its exchange over a large base:\n$p")
+    }
+    // the scan view's join plans as before (broadcast), not in place
+    val sel = Analyzers.all(v)("wall_by_selectivity_10")()
+    sel.collect()
+    assert(exchangesRun(sel.queryExecution.executedPlan).contains("BroadcastExchange"))
   }
 
   test("stats_moments: one partial+final aggregation pair carries all six moments") {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.analyze.{AnalyzerRunner, Analyzers}
-import graft.ingest.WorkloadViews
+import graft.ingest.{Extract, QueryInfoCorpus, WorkloadViews}
 import graft.queries.AnalyzerGates
 import graft.report.Report
 
@@ -191,13 +191,39 @@ class ReportSpec extends SparkSpec {
 
   test("a throwing analyzer renders its own failed: section and the others still render") {
     val v = views
-    val boom = """<section><h2 id="aaa_boom">aaa_boom</h2>""" +
-      "\n<p class=\"empty\">failed: boom</p>\n</section>\n"
-    val html = Report.render(v, colorblind = false,
-      Analyzers.all(v) + ("aaa_boom" -> (() => throw new IllegalStateException("boom"))))
-    assert(html.contains(boom))
+    def failed(name: String, msg: String) = s"""<section><h2 id="$name">$name</h2>""" +
+      s"\n<p class=\"empty\">failed: $msg</p>\n</section>\n"
+    val boom = failed("aaa_boom", "boom")
+    // an exception without a message names its class instead
+    val nullMsg = failed("aab_null", "java.lang.RuntimeException")
+    val html = Report.render(v, colorblind = false, Analyzers.all(v) +
+      ("aaa_boom" -> (() => throw new IllegalStateException("boom"))) +
+      ("aab_null" -> (() => throw new RuntimeException())))
+    assert(html.contains(boom) && html.contains(nullMsg))
     // every other section is exactly what the plain report renders
-    assert(html.replace(boom, "") === Report.render(v))
+    assert(html.replace(boom, "").replace(nullMsg, "") === Report.render(v))
+  }
+
+  test("one corpus window renders the same bytes from a 1- and a 4-partition base") {
+    // one 100-document QueryInfoCorpus window: its selectivity percents are
+    // double sums whose last ulp follows the partition order (the gate
+    // fixture is quarter-exact by design and cannot show the drift)
+    val tmp = java.nio.file.Files.createTempDirectory("report_partitions")
+    val raw = java.nio.file.Files.createDirectory(tmp.resolve("raw"))
+    (66100L until 66200L).foreach(i => java.nio.file.Files.writeString(
+      raw.resolve(s"q$i.json"), QueryInfoCorpus.documentBytes(i)))
+    Extract.writeParquet(Extract.extract(spark, raw.toString), s"$tmp/summary")
+    val summaries = spark.read.parquet(s"$tmp/summary")
+    val one = WorkloadViews(summaries.coalesce(1))
+    // force a four-partition base through the session's AQE size confs
+    val confs = Seq("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    val four = try {
+      confs.foreach(spark.conf.set(_, "1k"))
+      WorkloadViews(summaries.repartition(4))
+    } finally confs.foreach(spark.conf.unset)
+    assert(one.base.rdd.getNumPartitions === 1 && four.base.rdd.getNumPartitions === 4)
+    assert(Report.render(four) === Report.render(one))
   }
 
   test("every report job carries the caller's job group") {
