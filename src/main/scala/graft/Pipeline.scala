@@ -260,8 +260,8 @@ object Pipeline {
         case _ =>
       }
       // `--hash-tokens`: md5-prefix tokens instead of the sequential
-      // first-seen dictionary — drops the dictionary's total order (the
-      // last global sort in this stage) for huge name cardinality
+      // first-seen dictionaries — no names collected to the driver for the
+      // user and array renames, for huge name cardinality
       val hashTokens = opts.contains("--hash-tokens")
       if (opts.contains("--rename-user")) df = JsonlProcess.renameUsers(df, hashTokens)
       if (opts.contains("--rename-schemas")) df = JsonlProcess.renameSchemas(df, hashTokens)
@@ -274,7 +274,7 @@ object Pipeline {
         case _ =>
       }
       df.write.mode("overwrite").option("compression", "gzip").json(out)
-      println(s"processed ${spark.read.option("compression", "gzip").json(out).count()} records to $out")
+      println(s"processed ${spark.read.text(out).count()} records to $out")
       spark.stop()
 
     case "process-raw" :: in :: out :: opts =>

@@ -1,7 +1,6 @@
 package graft.process
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Stage 2.5 (reference `jsonl_process.py`): schema filtering + name
@@ -9,13 +8,14 @@ import org.apache.spark.sql.functions._
   *
   * The reference walks raw nested JSON per line (`nested_lookup`); on the
   * normalized schema each key lives in a known column, so filtering is a
-  * plain predicate and obfuscation a deterministic dictionary join — both
-  * distribute, and the dictionary ("translation table", printed by the
-  * reference at `jsonl_process.py:186-194`) is itself a DataFrame.
+  * plain predicate and obfuscation a map lookup in a narrow projection.
+  * Each dictionary (the reference's "translation table",
+  * `jsonl_process.py:186-194`) is built by one distributed aggregation
+  * over the distinct names and collected, bounded, to the driver.
   *
   * First-seen-order encoding (`NameObfuscator`, `jsonl_process.py:53-76`)
   * is order-dependent in the reference (file iteration order); here it is
-  * made deterministic as dense_rank over first occurrence = min(query_id)
+  * made deterministic as the rank of first occurrence = min(query_id)
   * (SURVEY §7.4), which reproduces the reference ordering when files are
   * processed in query-id order (they are: paths are sorted,
   * `extract.py:183`).
@@ -80,15 +80,17 @@ object JsonlProcess {
   // ---- token assignment modes -----------------------------------------
   //
   // Default tokens are the reference contract: `prefix0, prefix1, …` in
-  // first-seen order (`NameObfuscator`, `jsonl_process.py:53-61`), which
-  // requires a total order over the distinct names — a single-partition
-  // window, fine at dictionary cardinality. The opt-in HASH mode
-  // (`--hash-tokens`) trades the sequential numbering for
-  // `prefix` + 16-hex md5 prefix of the name: a pure narrow map — no
-  // dictionary, no window, no join, no explode — for corpora whose name
-  // cardinality is too large to total-order (64-bit tokens: collision odds
-  // ~n²/2^65, ~3e-7 at 100 M distinct names). Same injectivity and ''
-  // guard; tokens are stable across runs/partitionings by construction.
+  // first-seen order (`NameObfuscator`, `jsonl_process.py:53-61`). Every
+  // sequential dictionary — users, arrays, schemas, catalogs — goes
+  // through [[firstSeenDict]]: one bounded collect of the distinct names,
+  // numbered on the driver, then applied as a map-literal lookup in a
+  // narrow projection. The opt-in HASH mode (`--hash-tokens`) trades the
+  // sequential numbering for `prefix` + 16-hex md5 prefix of the name —
+  // for users and arrays a pure narrow map with no dictionary at all — for
+  // corpora whose name cardinality is too large to hold on the driver
+  // (64-bit tokens: collision odds ~n²/2^65, ~3e-7 at 100 M distinct
+  // names). Same injectivity and '' guard; tokens are stable across
+  // runs/partitionings by construction.
 
   /** The hash-mode token for one name column ('' passes through, like
     * `NameObfuscator.__call__`'s guard).
@@ -97,48 +99,38 @@ object JsonlProcess {
     when(c.isNull || c === "", c)
       .otherwise(concat(lit(prefix), substring(md5(c), 1, 16)))
 
-  /** Fail loudly when a JOIN-dictionary's distinct-name cardinality
-    * exceeds the [[maxDictNames]] bound (round 14): `broadcast(table)`
-    * materializes the dictionary on the driver exactly like `collect()`
-    * does, so the bound must hold on the join path too — before this,
-    * `--rename-user` on a pathological corpus (one generated name per
-    * row) hit an undiagnosed broadcast OOM while the collected
-    * schema/catalog path failed with named escape hatches. Costs one
-    * count over the distinct-name AGGREGATE (not the corpus), run
-    * before the single-partition token window ever builds.
+  /** The one sequential dictionary: `(old_name, first_seen)` rows, one per
+    * distinct name → `prefix0, prefix1, …` in `(first_seen, old_name)`
+    * order. Collected to the driver through [[collectBounded]]: obfuscation
+    * dictionaries are catalog-metadata-sized by nature (like the IVF
+    * centroids), and shipping them as plan literals makes every rewrite an
+    * in-place projection — no join, no explode/regroup, so duplicate
+    * query_ids can never merge rows and a null or empty array keeps its
+    * identity. `old_name` is distinct, so the numbering is exactly a dense
+    * rank over the first-seen order.
     */
-  private def requireDictBounded(names: DataFrame, what: String): Unit = {
-    val bound = maxDictNames(names.sparkSession)
-    val n = names.limit(bound.toInt + 1).count()
-    require(n <= bound,
-      s"$what: more than $bound distinct names — this dictionary is no " +
-        "longer catalog-metadata-sized and would exhaust driver memory at " +
-        "broadcast. Use --hash-tokens (pure-function tokens, no " +
-        "dictionary), raise spark.graft.maxDictNames deliberately, or " +
-        "pre-filter the corpus.")
+  private def firstSeenDict(names: DataFrame, prefix: String,
+      what: String): Map[String, String] =
+    collectBounded(names.orderBy(col("first_seen"), col("old_name")),
+        maxDictNames(names.sparkSession), what)
+      .zipWithIndex
+      .map { case (r, i) => r.getString(0) -> s"$prefix$i" }
+      .toMap
+
+  /** `c` through `dict`; names outside it — '' and null included — pass
+    * through. try_element_at, not element_at: under ANSI (Spark 4
+    * default) a miss on a map THROWS, and misses are normal here. The
+    * lookup scans the map literal's keys, so its per-row cost grows with
+    * the dictionary: past some thousands of names `--hash-tokens` is the
+    * cheaper mode.
+    */
+  private def lookup(dict: Map[String, String]): Column => Column = {
+    val m = typedLit(dict)
+    c => coalesce(try_element_at(m, c), c)
   }
 
-  /** Build the translation table for one column: distinct values →
-    * `prefix0, prefix1, …` in first-seen (min query_id) order.
-    */
-  def translationTable(df: DataFrame, column: String, prefix: String): DataFrame = {
-    val names = df.filter(col(column).isNotNull && col(column) =!= "")
-      .groupBy(col(column).as("old_name"))
-      .agg(min(col("query_id")).as("first_seen"))
-    requireDictBounded(names, s"$prefix dictionary")
-    names
-      .withColumn("new_name", concat(lit(prefix),
-        (dense_rank().over(
-          // total first-seen order is the dictionary's contract (tokens
-          // are assigned sequentially), so this window is single-partition
-          // by nature — over the distinct-name aggregate, never the rows
-          Window.orderBy(col("first_seen"), col("old_name"))) - 1)
-          .cast("string")))
-      .select(col("old_name"), col("new_name"))
-  }
-
-  /** A14/A15: replace `column` values via a translation table built with
-    * [[translationTable]] (empty strings pass through unchanged, matching
+  /** A14/A15: replace `column` values by their first-seen (min query_id)
+    * tokens ('' passes through unchanged, matching
     * `NameObfuscator.__call__`'s `''` guard).
     */
   def obfuscateColumn(df: DataFrame, column: String, prefix: String,
@@ -146,56 +138,34 @@ object JsonlProcess {
     if (hashTokens)
       df.withColumn(column, hashToken(col(column), prefix))
     else {
-      val table = translationTable(df, column, prefix)
-      df.join(broadcast(table), df(column) === table("old_name"), "left")
-        .withColumn(column, coalesce(col("new_name"), col(column)))
-        .drop("old_name", "new_name")
+      val names = df.filter(col(column).isNotNull && col(column) =!= "")
+        .groupBy(col(column).as("old_name"))
+        .agg(min(col("query_id")).as("first_seen"))
+      df.withColumn(column,
+        lookup(firstSeenDict(names, prefix, s"$prefix dictionary"))(col(column)))
     }
 
   /** `ListObfuscator` (`jsonl_process.py:68-76`): obfuscate every element
     * of an array<string> column through ONE shared dictionary (the
     * reference's partitionIds case). First-seen order is (min query_id,
     * min position) — the deterministic equivalent of its sequential scan.
+    * Both modes rewrite in place with `transform`: row identity, array
+    * order, '' elements and null/empty arrays are preserved by
+    * construction.
     */
   def obfuscateArrayColumn(df: DataFrame, column: String, prefix: String,
       hashTokens: Boolean = false): DataFrame = {
-    // hash mode: in-place element transform — null/empty arrays and ''
-    // elements keep their identity with no explode/regroup at all
     if (hashTokens)
       return df.withColumn(column,
         transform(col(column), x => hashToken(x, prefix)))
-    val exploded = df
-      .select(col("query_id"), posexplode(col(column)).as(Seq("pos", "old_name")))
-    // '' never enters the dictionary (NameObfuscator's guard) but keeps its
-    // position in the rebuilt array
-    val names = exploded
-      .filter(col("old_name") =!= "")
-      .groupBy(col("old_name"))
-      .agg(min(struct(col("query_id"), col("pos"))).as("first_seen"))
-    requireDictBounded(names, s"$prefix array dictionary")
-    val table = names
-      .withColumn("new_name", concat(lit(prefix),
-        (dense_rank().over(
-          // total first-seen order is the dictionary's contract (tokens
-          // are assigned sequentially), so this window is single-partition
-          // by nature — over the distinct-name aggregate, never the rows
-          Window.orderBy(col("first_seen"), col("old_name"))) - 1)
-          .cast("string")))
-      .select(col("old_name"), col("new_name"))
-    val rebuilt = exploded
-      .join(broadcast(table), Seq("old_name"), "left")
-      .withColumn("mapped",
-        when(col("old_name") === "", lit("")).otherwise(col("new_name")))
-      .groupBy(col("query_id"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("mapped")))),
-        c => c.getField("mapped")).as("__obf"))
-    // null arrays stay null; empty arrays stay empty (explode emits no rows
-    // for either, so distinguish via the original column)
-    df.join(rebuilt, Seq("query_id"), "left")
-      .withColumn(column,
-        when(col(column).isNull, lit(null).cast("array<string>"))
-          .otherwise(coalesce(col("__obf"), array().cast("array<string>"))))
-      .drop("__obf")
+    val names = df
+      .select(col("query_id"), explode(transform(col(column),
+        (x, i) => struct(i.as("pos"), x.as("old_name")))).as("e"))
+      .filter(col("e.old_name") =!= "")
+      .groupBy(col("e.old_name").as("old_name"))
+      .agg(min(struct(col("query_id"), col("e.pos"))).as("first_seen"))
+    df.withColumn(column, transform(col(column),
+      lookup(firstSeenDict(names, prefix, s"$prefix array dictionary"))))
   }
 
   // ---- schema / catalog obfuscation over the normalized carriers ------
@@ -220,19 +190,10 @@ object JsonlProcess {
   private def isThreePart(c: Column): Column =
     c.isNotNull && size(split(c, "\\.")) === 3
 
-  /** Shared first-seen dictionary over both carriers of one name kind:
-    * `fromInput` extracts the name from a raw inputs JSON element;
-    * `segIdx` is its segment position in a 3-part table name. Collected
-    * to the driver: schema/catalog dictionaries are catalog-metadata-
-    * sized by nature (like the IVF centroids), and shipping them as plan
-    * literals lets the rewrite below be an in-place array `transform` —
-    * no explode/regroup, so duplicate query_ids can never merge rows, and
-    * the summaries are scanned once per dictionary (plan nodes contribute
-    * both name fields through one explode).
-    */
   /** Hard bound on the distinct-name cardinality a collected obfuscation
-    * dictionary may reach (round 12): the schema/catalog dictionaries are
-    * catalog-metadata-sized by NATURE, and that scale contract is now
+    * dictionary may reach (round 12): every obfuscation dictionary — users,
+    * arrays, schemas, catalogs — is collected to the driver and
+    * catalog-metadata-sized by NATURE, and that scale contract is
     * enforced, not just documented — a pathological corpus (say, one
     * generated schema per query) would otherwise OOM the driver inside
     * `collect()` with no diagnosis. 10M names ≈ hundreds of MB of driver
@@ -285,6 +246,12 @@ object JsonlProcess {
     rows
   }
 
+  /** Shared dictionary over both carriers of one name kind: `fromInput`
+    * extracts the name from a raw inputs JSON element; `segIdx` is its
+    * segment position in a 3-part table name. The summaries are scanned
+    * once per dictionary (plan nodes contribute both name fields through
+    * one explode).
+    */
   private def sharedDict(df: DataFrame, fromInput: Column => Column,
       segIdx: Int, prefix: String, hashTokens: Boolean = false): Map[String, String] = {
     val fromInputs = df.select(col("query_id"), explode(col("inputs")).as("inp"))
@@ -303,19 +270,13 @@ object JsonlProcess {
     // still collected (applyDict rewrites both nested carriers from a map
     // literal), so hash mode removes the total-order sort but keeps the
     // catalog-metadata-sized driver map.
-    val bound = maxDictNames(df.sparkSession)
     if (hashTokens)
       collectBounded(names.select(col("old_name"),
           concat(lit(prefix), substring(md5(col("old_name")), 1, 16)).as("tok")),
-          bound, s"$prefix dictionary (hash mode)")
+          maxDictNames(df.sparkSession), s"$prefix dictionary (hash mode)")
         .map(r => r.getString(0) -> r.getString(1))
         .toMap
-    else
-      collectBounded(names.orderBy(col("first_seen"), col("old_name")),
-          bound, s"$prefix dictionary")
-        .zipWithIndex
-        .map { case (r, i) => r.getString(0) -> s"$prefix$i" }
-        .toMap
+    else firstSeenDict(names, prefix, s"$prefix dictionary")
   }
 
   /** The compact-JSON escape of a name as Jackson stores it: the raw

@@ -45,10 +45,13 @@ class JsonlProcessSpec extends SparkSpec {
       .select("query_id", "user").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(again === vals)
-    // the point of the mode: a narrow map — no window, no join, no shuffle
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window") && !plan.contains("Exchange")
-      && !plan.contains("Join"), plan)
+    // the point of the mode: a narrow map — no window, no join, no shuffle;
+    // the sequential mode's rewrite is a narrow map over its collected
+    // dictionary too
+    for (plan <- Seq(out, JsonlProcess.renameUsers(df))
+        .map(_.queryExecution.executedPlan.toString))
+      assert(Seq("Window", "Exchange", "Join", "Generate")
+        .forall(op => !plan.contains(op)), plan)
   }
 
   test("hash-token array mode keeps '' / empty / null identity without explode") {
@@ -67,9 +70,10 @@ class JsonlProcessSpec extends SparkSpec {
     assert(rows(0).get.forall(v => v.isEmpty || v.startsWith("partition")))
     assert(rows(1) === Some(Nil))
     assert(rows(2) === None)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window") && !plan.contains("Exchange")
-      && !plan.contains("Generate"), plan)
+    for (plan <- Seq(out, JsonlProcess.obfuscateArrayColumn(d, "partition_ids", "partition"))
+        .map(_.queryExecution.executedPlan.toString))
+      assert(Seq("Window", "Exchange", "Join", "Generate")
+        .forall(op => !plan.contains(op)), plan)
   }
 
   test("filter keeps matches, includeAbsent keeps nulls") {
@@ -325,6 +329,12 @@ class JsonlProcessSpec extends SparkSpec {
     val sizes = out.select(size(col("inputs")).as("s")).collect().map(_.getInt(0)).sorted
     val orig = workload.select(size(col("inputs")).as("s")).collect().map(_.getInt(0))
     assert(sizes.toSeq === (orig ++ orig).sorted.toSeq)
+    // an array column keeps each duplicate row's own elements: a and b tie
+    // on first_seen (q1, 0), so name order breaks the tie
+    val arr = Seq(("q1", Seq("a")), ("q1", Seq("b"))).toDF("query_id", "ids")
+    val renamed = JsonlProcess.obfuscateArrayColumn(arr, "ids", "part")
+      .collect().map(_.getSeq[String](1).toList).sortBy(_.mkString)
+    assert(renamed.toSeq === Seq(List("part0"), List("part1")))
   }
 
   test("filterBySchema keeps matches and schema-free rows") {
@@ -367,10 +377,10 @@ class JsonlProcessSpec extends SparkSpec {
     }
   }
 
-  test("join-dictionary paths enforce the cardinality bound like the collected ones") {
-    // broadcast() materializes on the driver exactly like collect():
-    // renameUsers (translationTable) and the array dictionary must fail
-    // with the named escape hatches past spark.graft.maxDictNames
+  test("user and array dictionaries enforce the cardinality bound") {
+    // both are collected to the driver like the schema/catalog ones:
+    // renameUsers and the array dictionary must fail with the named
+    // escape hatches past spark.graft.maxDictNames
     spark.conf.set("spark.graft.maxDictNames", "2")
     try {
       val e = intercept[IllegalArgumentException](
