@@ -64,7 +64,7 @@ object PlanFingerprint {
       .replaceAll("\\*\\(\\d+\\)", "*(n)")
       .replaceAll("(Shuffle|Broadcast|TableCache)QueryStage \\d+", "$1QueryStage n")
       .replaceAll("#\\d+L?", "#x") // expression ids
-      .replaceAll("lambda x_\\d+", "lambda x_") // global lambda-var counter
+      .replaceAll("lambda ([xyz])_\\d+", "lambda $1_") // global lambda-var counter
       .replaceAll("\\[(plan_)?id=#?\\d+\\]", "[id=x]") // exchange/plan ids
       .replaceAll("\\$\\$Lambda\\$?[\\d/]*0x[0-9a-f]+(@[0-9a-f]+)?", "\\$\\$Lambda\\$x")
       .replaceAll("@[0-9a-f]{6,}", "@x") // JVM identity hashes

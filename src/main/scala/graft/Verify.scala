@@ -10,8 +10,6 @@ object Verify {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
       .config("spark.sql.session.timeZone", "UTC")
       // TIMESTAMP(NANOS) parquet must be readable from first load (see
       // Tables.ensureNanosAsLong, which only covers foreign sessions)

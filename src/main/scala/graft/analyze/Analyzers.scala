@@ -163,18 +163,19 @@ object Analyzers {
 
   // ---- B19-B23: selectivity family -----------------------------------
 
-  private def scanSelectivity(v: WorkloadViews): DataFrame =
-    v.scanOps("Scan")
+  /** The `family` scan ops that read rows, with their output/input ratio. */
+  private def scanSelectivity(v: WorkloadViews, family: String): DataFrame =
+    v.scanOps(family)
       .filter(col("input_rows") > 0)
       .withColumn("selectivity", col("output_rows").cast("double") / col("input_rows"))
 
   /** B19 `analyze.py:689-695`. */
   def wallBySelectivity10(v: WorkloadViews): DataFrame =
-    ChartOps.selectivityBins(scanSelectivity(v), "selectivity", "wall", 10, 1.0)
+    ChartOps.selectivityBins(scanSelectivity(v, "Scan"), "selectivity", "wall", 10, 1.0)
 
   /** B20 `analyze.py:698-705` (1-decimal binning quirk preserved). */
   def wallBySelectivity100First20(v: WorkloadViews): DataFrame =
-    ChartOps.selectivityBins(scanSelectivity(v), "selectivity", "wall", 100, 0.2)
+    ChartOps.selectivityBins(scanSelectivity(v, "Scan"), "selectivity", "wall", 100, 0.2)
 
   /** B21 `analyze.py:716-744`: every `*Filter*` operator occurrence. */
   def filterSelectivity(v: WorkloadViews): DataFrame =
@@ -188,9 +189,7 @@ object Analyzers {
     * literal list (`table_name` is never null, see `WorkloadViews.scans`).
     */
   private def topTablePoints(v: WorkloadViews): DataFrame = {
-    val pts = v.scanOps("ScanFilter")
-      .filter(col("input_rows") > 0)
-      .withColumn("selectivity", col("output_rows").cast("double") / col("input_rows"))
+    val pts = scanSelectivity(v, "ScanFilter")
     val top5 = pts.groupBy(col("table_name")).agg(sum(col("wall")).as("w"))
       .orderBy(col("w").desc, col("table_name")).limit(5)
       .select(col("table_name")).collect().map(_.getString(0))

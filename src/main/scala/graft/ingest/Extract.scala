@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.QuerySummary
 
@@ -95,19 +95,22 @@ object Extract {
 }
 
 /** The cached derived views every analyzer consumes (SURVEY §7.1): the
-  * summaries are scanned once; `operators` / `plan_nodes` / `scans` /
-  * `joins` are exploded/joined once and reused by all 28 analyzers instead
-  * of 28 rescans (the reference re-iterates its in-memory list per chart,
+  * summaries are scanned once; `operators` / `scans` / `joins` are
+  * exploded once and reused by all 28 analyzers instead of 28 rescans
+  * (the reference re-iterates its in-memory list per chart,
   * `analyze.py:1241-1248`).
+  *
+  * Each view is a narrow projection of [[base]]: plan nodes and operators
+  * are resolved inside their own query's arrays, so no view plans a join,
+  * a window or an exchange.
   *
   * Partitioning: [[base]] is cached in [[WorkloadViews.basePartitions]]
   * partitions, the count AQE would coalesce a shuffle of the summary
   * relation's size into. A small workload (the daily 100-document window)
   * gets ONE partition: every view derived from it reports
-  * `SinglePartition`, so the analyzers' `groupBy`s, windows and sorts and
-  * the [[scans]] join need no exchange, and each chart runs as one-stage
-  * jobs ([[joins]] keeps its broadcast joins). A large workload keeps its
-  * scan parallelism and its exchanges.
+  * `SinglePartition`, so the analyzers' `groupBy`s, windows and sorts need
+  * no exchange, and each chart runs as one-stage jobs. A large workload
+  * keeps its scan parallelism and its exchanges.
   *
   * Safe to share between concurrently running analyzers
   * ([[graft.analyze.AnalyzerRunner]]): a lazy view is initialized under
@@ -118,67 +121,52 @@ final class WorkloadViews private (val summaries: DataFrame) {
 
   import WorkloadViews._
 
-  private val partitions = basePartitions(summaries)
-
   /** FAILED-filtered base (A28 — analysis side only, `analyze.py:1231-1235`),
     * with the query-id-derived event timestamp (`analyze.py:62-63`).
     */
   val base: DataFrame = summaries
     .filter(col("state") =!= "FAILED")
     .withColumn("ts", to_timestamp(substring(col("query_id"), 1, 15), "yyyyMMdd_HHmmss"))
-    .coalesce(partitions)
+    .coalesce(basePartitions(summaries))
     .cache()
 
-  /** One row per operator occurrence (A7). `op_idx` keeps the source array
-    * position — the reference's per-node `{op["type"]: op}` dict
-    * (`analyze.py:1056`) is last-occurrence-wins, which needs list order.
-    *
-    * `lazy` (r21, like every derived view below): a WorkloadViews is
-    * constructed per analyzer-gate invocation, and roughly half the
-    * analyzers consume only [[base]] — eagerly building the
-    * operators/planNodes/joins plans (two windows + two joins) charged
-    * every base-only gate driver-side plan construction for views it
-    * never ran.
+  /** One row per operator occurrence of `queries` (a projection of [[base]])
+    * with its query's `query_id`, `ts` and `carry` columns and summed `wall`.
     */
-  lazy val operators: DataFrame = base
-    .select(col("query_id"), col("ts"), posexplode(col("operators")).as(Seq("op_idx", "op")))
-    .select(col("query_id"), col("ts"), col("op_idx"), col("op.*"))
+  private def explodeOperators(queries: DataFrame, carry: String*): DataFrame = queries
+    .select((Seq("query_id", "ts") ++ carry).map(col)
+      :+ posexplode(col("operators")).as(Seq("op_idx", "op")): _*)
+    .select(col("*"), col("op.*")).drop("op")
     .withColumn("wall",
       coalesce(col("input_wall"), lit(0.0))
         + coalesce(col("output_wall"), lit(0.0))
         + coalesce(col("finish_wall"), lit(0.0)))
-    .cache()
 
-  /** One row per plan node (A9/A19, flattened at ingest). */
-  lazy val planNodes: DataFrame = base
-    .select(col("query_id"), explode(col("plan_nodes")).as("n"))
-    .select(col("query_id"), col("n.*"))
-    .cache()
-
-  /** Per (query, node_id): the reference's `{id: node}` dict keeps the last
-    * fragment's node on id collisions (`analyze.py:596,1028-1037`) — mirror
-    * with a max-fragment_idx row_number.
+  /** One row per operator occurrence (A7).
+    *
+    * `lazy` (r21, like every derived view below): a WorkloadViews is
+    * constructed per analyzer-gate invocation, and roughly half the
+    * analyzers consume only [[base]] — eagerly building the derived plans
+    * charged every base-only gate driver-side plan construction for views
+    * it never ran.
     */
-  lazy val nodesDeduped: DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    planNodes.withColumn("rn", row_number().over(
-      Window.partitionBy(col("query_id"), col("node_id"))
-        .orderBy(col("fragment_idx").desc, col("dfs_order").desc)))
-      .filter(col("rn") === 1).drop("rn")
-  }
+  lazy val operators: DataFrame = explodeOperators(base).cache()
 
-  /** Every `*Scan*` operator occurrence joined to its plan node's deepest
-    * table (A21-A23, B18/B22-24), `table_name` "" when the node has none.
-    * Cached once: eight analyzers read it through [[scanOps]]. Over a
-    * single-partition base both join sides are one partition, so the
-    * table side is hash-joined in place: no exchange, and no broadcast job.
+  /** Every `*Scan*` operator occurrence with its resolved plan node's
+    * deepest table (A21-A23, B18/B22-24), `table_name` "" when the query
+    * has no node of that id or the node has no table. Cached once: eight
+    * analyzers read it through [[scanOps]].
     */
   lazy val scans: DataFrame = {
-    val tables = nodesDeduped.select(col("query_id"), col("node_id"), col("deepest_table"))
-    operators.filter(col("operator_type").contains("Scan"))
-      .join(if (partitions == 1) tables.hint("shuffle_hash") else tables,
-        Seq("query_id", "node_id"), "left")
+    val nodes = col("nodes")
+    val pos = array_position(nodes.getField("node_id"), col("node_id"))
+    explodeOperators(withResolvedNodes(base), "nodes")
+      .filter(col("operator_type").contains("Scan"))
+      // array_position is 0 when the id is absent, and element_at(_, 0) throws
+      .withColumn("deepest_table",
+        when(pos > 0, element_at(nodes, pos.cast("int")).getField("deepest_table")))
       .withColumn("table_name", coalesce(col("deepest_table"), lit("")))
+      .drop("nodes")
       .cache()
   }
 
@@ -190,47 +178,37 @@ final class WorkloadViews private (val summaries: DataFrame) {
     scans.filter(col("operator_type").contains(typeSubstring))
   }
 
-  /** Classified join sites (A24, `analyze.py:1040-1080`): per join/semijoin
-    * plan node, the probe/build operator pair.
+  /** Classified join sites (A24, `analyze.py:1040-1080`): per resolved
+    * join/semijoin node, the probe/build pair, each the LAST operator of its
+    * type on the node (`{op["type"]: op}`, `analyze.py:1056`); a site
+    * missing either side is dropped.
     */
   lazy val joins: DataFrame = {
-    val joinNodes = nodesDeduped
-      .filter(col("node_type").endsWith("join"))
+    val hashed = col("has_criteria") || col("join_type") =!= "INNER"
+    def lastOp(typeCol: String): Column = try_element_at(
+      filter(col("operators"),
+        o => o.getField("node_id") === col("node_id") && o.getField("operator_type") === col(typeCol)),
+      lit(-1))
+    withResolvedNodes(base)
+      .select(col("query_id"), col("operators"),
+        explode(filter(col("nodes"), _.getField("node_type").endsWith("join"))).as("n"))
+      .select(col("query_id"), col("operators"), col("n.*"))
       .withColumn("probe_type",
         when(col("node_type") === "semijoin", lit("HashSemiJoinOperator"))
-          .when(col("has_criteria") || col("join_type") =!= "INNER", lit("LookupJoinOperator"))
+          .when(hashed, lit("LookupJoinOperator"))
           .otherwise(lit("NestedLoopJoinOperator")))
       .withColumn("build_type",
         when(col("node_type") === "semijoin", lit("SetBuilderOperator"))
-          .when(col("has_criteria") || col("join_type") =!= "INNER", lit("HashBuilderOperator"))
+          .when(hashed, lit("HashBuilderOperator"))
           .otherwise(lit("NestedLoopBuildOperator")))
-    // `{op["type"]: op}` keeps exactly ONE operator per (node, type) — the
-    // last in list order (`analyze.py:1056`). Without this dedup a node
-    // carrying duplicate probe/build entries would emit a cross product.
-    val opsLast = {
-      import org.apache.spark.sql.expressions.Window
-      operators.withColumn("rn", row_number().over(
-        Window.partitionBy(col("query_id"), col("node_id"), col("operator_type"))
-          .orderBy(col("op_idx").desc)))
-        .filter(col("rn") === 1).drop("rn")
-    }
-    val probe = opsLast.select(col("query_id"), col("node_id"),
-      col("operator_type").as("probe_type"),
-      col("input_size").as("probe_input_size"),
-      col("input_rows").as("probe_input_rows"),
-      col("output_rows").as("probe_output_rows"))
-    val build = opsLast.select(col("query_id"), col("node_id"),
-      col("operator_type").as("build_type"),
-      col("input_size").as("build_input_size"),
-      col("input_rows").as("build_input_rows"))
-    // planned as the default broadcast joins at any size: Spark keeps two
-    // single-partition join sides in place only while their size estimate
-    // is under `spark.sql.maxSinglePartitionBytes`, and the estimate of the
-    // first join's output (the product of its inputs') is not, so an
-    // in-place second join would be shuffled
-    joinNodes
-      .join(probe, Seq("query_id", "node_id", "probe_type"))
-      .join(build, Seq("query_id", "node_id", "build_type"))
+      .select(col("*"), lastOp("probe_type").as("probe"), lastOp("build_type").as("build"))
+      .filter(col("probe").isNotNull && col("build").isNotNull)
+      .select(col("*"), col("probe.input_size").as("probe_input_size"),
+        col("probe.input_rows").as("probe_input_rows"),
+        col("probe.output_rows").as("probe_output_rows"),
+        col("build.input_size").as("build_input_size"),
+        col("build.input_rows").as("build_input_rows"))
+      .drop("operators", "probe", "build")
       .cache()
   }
 }
@@ -289,6 +267,24 @@ object WorkloadViews {
     graft.tables.Tables.driftAgainst(ExpectedSummary,
       org.apache.spark.sql.types.StructType(
         schema.fields.map(f => f.copy(dataType = asNullable(f.dataType)))))
+
+  /** `queries` plus `nodes`, its `plan_nodes` with one node per `node_id`:
+    * the last fragment's, then the later `dfs_order`'s, as the reference's
+    * `{id: node}` dict keeps it (`analyze.py:596,1028-1037`). One sort puts
+    * each id's winner first in its run; the filter keeps the run heads and
+    * reads the sorted column, so the sort runs once per query.
+    */
+  private def withResolvedNodes(queries: DataFrame): DataFrame = {
+    val sorted = col("nodes")
+    queries
+      .withColumn("nodes", sort_array(transform(col("plan_nodes"), n => named_struct(
+        lit("id"), n.getField("node_id"), lit("f"), -n.getField("fragment_idx"),
+        lit("d"), -n.getField("dfs_order"), lit("node"), n))))
+      // CASE, not OR, so element_at(_, 0), which throws, is never evaluated
+      .withColumn("nodes", transform(filter(sorted, (x, i) => when(i === 0, lit(true))
+        .otherwise(!(element_at(sorted, i).getField("id") <=> x.getField("id")))),
+        _.getField("node")))
+  }
 
   /** Partitions for the cached [[WorkloadViews.base]]: the rule AQE
     * applies when it coalesces shuffle output

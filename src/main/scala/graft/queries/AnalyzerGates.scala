@@ -77,8 +77,9 @@ object AnalyzerGates {
        |      + COALESCE(op.finish_wall, 0.0) AS DOUBLE) AS wall
        |  FROM (SELECT query_id, UNNEST(operators) AS op FROM $summSql)""".stripMargin
 
-  /** Twin of WorkloadViews.nodesDeduped: per (query, node_id) the LAST
-    * fragment's node wins on id collisions (`analyze.py:596,1028-1037`).
+  /** Twin of WorkloadViews.withResolvedNodes: per (query, node_id) the
+    * LAST fragment's node wins on id collisions, then the later dfs_order
+    * (`analyze.py:596,1028-1037`).
     */
   private def nodesSql =
     s"""(SELECT * FROM (
@@ -93,7 +94,7 @@ object AnalyzerGates {
        |  ) WHERE rn = 1)""".stripMargin
 
   /** Twin of WorkloadViews.scanOps: operator occurrences of a type family
-    * joined to their plan node's deepest scanned table.
+    * with their resolved plan node's deepest scanned table.
     */
   private def scanOpsSql(typ: String) =
     s"""(SELECT o.query_id, o.operator_type, o.input_size, o.input_rows,

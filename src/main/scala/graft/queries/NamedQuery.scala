@@ -89,14 +89,18 @@ object QueryDsl {
     */
   def fanout(df: DataFrame): DataFrame = {
     val s = df.sparkSession
-    val off = df.isStreaming ||
-      sys.env.get("SPARK_GRAFT_FANOUT").exists(v => v == "0" || v.equalsIgnoreCase("false")) ||
-      s.conf.getOption("spark.graft.fanout").exists(v => v == "0" || v.equalsIgnoreCase("false"))
+    val off = df.isStreaming || fanoutOff(s)
     if (off) df
     else {
       val target = s.sparkContext.defaultParallelism
       if (df.rdd.getNumPartitions * 2 > target) df else df.repartition(target)
     }
+  }
+
+  /** The [[fanout]] kill switches: `SPARK_GRAFT_FANOUT` / `spark.graft.fanout` = 0 or false. */
+  private def fanoutOff(s: SparkSession): Boolean = {
+    def off(v: String) = v == "0" || v.equalsIgnoreCase("false")
+    sys.env.get("SPARK_GRAFT_FANOUT").exists(off) || s.conf.getOption("spark.graft.fanout").exists(off)
   }
 
   /** Streaming twin of [[fanout]] (r22): fans a bounded file-stream's
@@ -114,9 +118,7 @@ object QueryDsl {
     */
   def fanoutStream(df: DataFrame, batchProbe: DataFrame): DataFrame = {
     val s = df.sparkSession
-    val off = !df.isStreaming ||
-      sys.env.get("SPARK_GRAFT_FANOUT").exists(v => v == "0" || v.equalsIgnoreCase("false")) ||
-      s.conf.getOption("spark.graft.fanout").exists(v => v == "0" || v.equalsIgnoreCase("false"))
+    val off = !df.isStreaming || fanoutOff(s)
     if (off) df
     else {
       val target = s.sparkContext.defaultParallelism

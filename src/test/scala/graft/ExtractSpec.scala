@@ -158,6 +158,35 @@ class ExtractSpec extends SparkSpec {
     assert(rows.head.getDouble(1) === 3.0)
   }
 
+  test("node resolution: the later fragment's node wins, then the later dfs_order") {
+    import spark.implicits._
+    import graft.model.{OperatorStat, PlanNode, QuerySummary}
+    def op(id: String, t: String) = OperatorStat(id, t, Some(1.0), None,
+      None, None, Some(10L), Some(5L), None, None, None, None, Some(1.0),
+      None, None, None)
+    def node(frag: Int, id: String, typ: String, dfs: Int, table: String) =
+      PlanNode(s"$frag", frag, id, typ, None, 0, dfs, dfs, None, Some(table),
+        Some("INNER"), Some("PARTITIONED"), Some(true))
+    // node 5 and node 7 appear in two fragments, node 9 twice in one; the
+    // winners of 5 and 7 are listed first and 9's last, so neither the
+    // first nor the last occurrence in list order gets all three right
+    val s = QuerySummary("q", "20220101_000000_00001_zzzzz", "u", "FINISHED",
+      None, None, None, None, None, None, None, None, None, None, None,
+      None, None, None, Seq(),
+      Seq(op("5", "TableScanOperator"), op("9", "ScanFilterAndProjectOperator"),
+        op("7", "LookupJoinOperator"), op("7", "HashBuilderOperator")),
+      Seq(node(1, "5", "tablescan", 0, "late"), node(1, "7", "project", 1, "p"),
+        node(0, "5", "tablescan", 0, "early"), node(0, "7", "join", 1, "j"),
+        node(2, "9", "tablescan", 1, "shallow"), node(2, "9", "tablescan", 3, "deep")),
+      Seq())
+    val v = WorkloadViews(Seq(s).toDS().toDF())
+    val scans = v.scans.select("node_id", "table_name").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(scans === Map("5" -> "late", "9" -> "deep"))
+    // node 7's join is shadowed by the later fragment's project node
+    assert(v.joins.count() === 0)
+  }
+
   // r21: the binaryFile+task-side-gunzip source — gz handling is
   // extension-keyed (the reference's rule) and a corrupt ARCHIVE drops
   // the record (extract.py's per-file catch) instead of failing the task

@@ -81,4 +81,11 @@ class PlanFingerprintSpec extends SparkSpec {
           "with SPARK_GRAFT_REGEN_FINGERPRINTS=1 and commit it")
     }
   }
+
+  test("normalize erases the counter of every lambda variable, the index's too") {
+    // `filter(arr, (x, i) => ..)` names its variables x_N and y_N from one
+    // JVM-wide counter, so N depends on what ran before in the JVM
+    assert(PlanFingerprint.normalize("lambda x_12#3, lambda y_7#4") ===
+      PlanFingerprint.normalize("lambda x_1#5, lambda y_99#6"))
+  }
 }

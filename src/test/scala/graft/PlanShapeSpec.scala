@@ -127,22 +127,25 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("Window"))
   }
 
-  /** The exchanges of the plan that ran: AQE's final plans, down into the
+  /** The nodes of the plan that ran: AQE's final plans, down into the
     * plans of the cached relations it read (an AQE plan string also prints
     * the initial plan, whose exchanges the final plan may have dropped).
     */
-  private def exchangesRun(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] = {
+  private def nodesRun(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.Exchange
     p match {
-      case a: AdaptiveSparkPlanExec => exchangesRun(a.executedPlan)
-      case q: QueryStageExec => exchangesRun(q.plan)
-      case m: InMemoryTableScanExec => exchangesRun(m.relation.cachedPlan)
-      case e: Exchange => e.nodeName +: e.children.flatMap(exchangesRun)
-      case other => other.children.flatMap(exchangesRun)
+      case a: AdaptiveSparkPlanExec => nodesRun(a.executedPlan)
+      case q: QueryStageExec => nodesRun(q.plan)
+      case m: InMemoryTableScanExec => m +: nodesRun(m.relation.cachedPlan)
+      case other => other +: other.children.flatMap(nodesRun)
     }
   }
+
+  /** The exchanges of the plan that ran (see [[nodesRun]]). */
+  private def exchangesRun(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
+    nodesRun(p).collect { case e: org.apache.spark.sql.execution.exchange.Exchange => e.nodeName }
 
   test("pie: only TakeOrdered or global aggregates over the cached per-key aggregate") {
     import spark.implicits._
@@ -171,8 +174,8 @@ class PlanShapeSpec extends SparkSpec {
     import graft.ingest.WorkloadViews
     val v = WorkloadViews(spark.read.parquet(graft.queries.AnalyzerGates.fixtureDir))
     assert(v.base.rdd.getNumPartitions === 1)
-    // a grouped trend, a sorted scatter and the scan view's join: none needs
-    // an exchange or a broadcast
+    // a grouped trend, a sorted scatter and two scan-view analyzers: none
+    // needs an exchange or a broadcast
     for (a <- Seq("scheduled_by_date", "peak_mem_by_query", "wall_by_selectivity_10",
         "walltime_vs_selectivity")) {
       val df = Analyzers.all(v)(a)()
@@ -198,10 +201,18 @@ class PlanShapeSpec extends SparkSpec {
       val p = df.queryExecution.executedPlan
       assert(exchangesRun(p).contains("Exchange"), s"$a lost its exchange over a large base:\n$p")
     }
-    // the scan view's join plans as before (broadcast), not in place
-    val sel = Analyzers.all(v)("wall_by_selectivity_10")()
-    sel.collect()
-    assert(exchangesRun(sel.queryExecution.executedPlan).contains("BroadcastExchange"))
+    // the scan and join views resolve nodes inside each query at any size
+    val small = WorkloadViews(spark.read.parquet(graft.queries.AnalyzerGates.fixtureDir))
+    for (w <- Seq(small, v);
+        a <- Seq("wall_by_selectivity_10", "walltime_vs_selectivity", "joins_sides")) {
+      val df = Analyzers.all(w)(a)()
+      df.collect()
+      val p = df.queryExecution.executedPlan
+      val names = nodesRun(p).map(_.nodeName)
+      for (op <- Seq("Join", "Window", "BroadcastExchange"))
+        assert(!names.exists(_.contains(op)),
+          s"$op in $a over a ${w.base.rdd.getNumPartitions}-partition base:\n$p")
+    }
   }
 
   test("stats_moments: one partial+final aggregation pair carries all six moments") {

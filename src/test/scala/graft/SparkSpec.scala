@@ -35,8 +35,6 @@ object SparkSpec {
       .master("local[2]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
       .config("spark.sql.session.timeZone", "UTC")
       // TIMESTAMP(NANOS) parquet must be readable from first load (see
       // Tables.ensureNanosAsLong, which only covers foreign sessions)
