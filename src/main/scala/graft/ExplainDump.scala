@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Diagnostic (like [[PlanDump]], not library surface): write each gate's
+/** Diagnostic (not library surface): write each gate's
   * `explain("formatted")` text to `<outDir>/<gate>_<suffix>.txt`, for the
   * optimization rounds' committed before/after plan evidence
-  * (`plans/rNN/`). Session configured like Bench so the dumped plan is
-  * the judged plan shape.
+  * (`plans/rNN/`). Bench's session recipe ([[Sessions]]), so the dumped
+  * plan is the judged plan shape.
   *
   * Usage: `runMain graft.ExplainDump <outDir> <suffix> [gates-csv] [sfDir]`
   * — gates defaults to the full registry, sfDir to /root/testdata/sf0.1.
@@ -15,25 +15,10 @@ object ExplainDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
-    val gates: Seq[String] =
-      if (args.length > 2 && args(2).nonEmpty && args(2) != "all")
-        args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
+    val gates = SparkEntry.select(if (args.length > 2 && args(2) != "all") args(2) else "")
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(2, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-explain")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val unknown = gates.filterNot(SparkEntry.queries.keySet)
-    require(unknown.isEmpty, s"unknown gates: ${unknown.mkString(",")}")
     gates.foreach { g =>
       val txt =
         try SparkEntry.queries(g)(spark, sfDir).queryExecution

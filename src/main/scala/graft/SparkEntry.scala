@@ -30,6 +30,18 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(q => q.name -> q.fn).toMap
 
+  /** The gates a comma list names, in name order: blank tokens are
+    * dropped, and a list that names none (unset, empty or blank) selects
+    * the whole registry. An unknown name fails here, before any Spark work.
+    */
+  def select(csv: String): Seq[String] = {
+    val known = queries.keySet
+    val names = csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names -- known
+    require(unknown.isEmpty, s"unknown gate names: ${unknown.toSeq.sorted.mkString(",")}")
+    (if (names.isEmpty) known else names).toSeq.sorted
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

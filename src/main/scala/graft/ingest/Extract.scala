@@ -182,33 +182,40 @@ final class WorkloadViews private (val summaries: DataFrame) {
     * join/semijoin node, the probe/build pair, each the LAST operator of its
     * type on the node (`{op["type"]: op}`, `analyze.py:1056`); a site
     * missing either side is dropped.
+    *
+    * The sites are built and filtered inside each query's array before the
+    * explode, so each lookup runs once per join node: a filter on lookups
+    * projected after the explode would be pushed below that projection,
+    * with the lookups inlined into it.
     */
   lazy val joins: DataFrame = {
-    val hashed = col("has_criteria") || col("join_type") =!= "INNER"
-    def lastOp(typeCol: String): Column = try_element_at(
-      filter(col("operators"),
-        o => o.getField("node_id") === col("node_id") && o.getField("operator_type") === col(typeCol)),
+    def lastOp(site: Column, typeField: String): Column = try_element_at(
+      filter(col("operators"), o =>
+        o.getField("node_id") === site.getField("n").getField("node_id") &&
+          o.getField("operator_type") === site.getField(typeField)),
       lit(-1))
+    val typed = transform(filter(col("nodes"), _.getField("node_type").endsWith("join")), { n =>
+      val semi = n.getField("node_type") === "semijoin"
+      val hashed = n.getField("has_criteria") || n.getField("join_type") =!= "INNER"
+      struct(n.as("n"),
+        when(semi, lit("HashSemiJoinOperator")).when(hashed, lit("LookupJoinOperator"))
+          .otherwise(lit("NestedLoopJoinOperator")).as("probe_type"),
+        when(semi, lit("SetBuilderOperator")).when(hashed, lit("HashBuilderOperator"))
+          .otherwise(lit("NestedLoopBuildOperator")).as("build_type"))
+    })
+    val sites = filter(
+      transform(typed, s => struct(s.getField("n").as("n"),
+        s.getField("probe_type").as("probe_type"), s.getField("build_type").as("build_type"),
+        lastOp(s, "probe_type").as("probe"), lastOp(s, "build_type").as("build"))),
+      s => s.getField("probe").isNotNull && s.getField("build").isNotNull)
     withResolvedNodes(base)
-      .select(col("query_id"), col("operators"),
-        explode(filter(col("nodes"), _.getField("node_type").endsWith("join"))).as("n"))
-      .select(col("query_id"), col("operators"), col("n.*"))
-      .withColumn("probe_type",
-        when(col("node_type") === "semijoin", lit("HashSemiJoinOperator"))
-          .when(hashed, lit("LookupJoinOperator"))
-          .otherwise(lit("NestedLoopJoinOperator")))
-      .withColumn("build_type",
-        when(col("node_type") === "semijoin", lit("SetBuilderOperator"))
-          .when(hashed, lit("HashBuilderOperator"))
-          .otherwise(lit("NestedLoopBuildOperator")))
-      .select(col("*"), lastOp("probe_type").as("probe"), lastOp("build_type").as("build"))
-      .filter(col("probe").isNotNull && col("build").isNotNull)
-      .select(col("*"), col("probe.input_size").as("probe_input_size"),
-        col("probe.input_rows").as("probe_input_rows"),
-        col("probe.output_rows").as("probe_output_rows"),
-        col("build.input_size").as("build_input_size"),
-        col("build.input_rows").as("build_input_rows"))
-      .drop("operators", "probe", "build")
+      .select(col("query_id"), explode(sites).as("s"))
+      .select(col("query_id"), col("s.n.*"), col("s.probe_type"), col("s.build_type"),
+        col("s.probe.input_size").as("probe_input_size"),
+        col("s.probe.input_rows").as("probe_input_rows"),
+        col("s.probe.output_rows").as("probe_output_rows"),
+        col("s.build.input_size").as("build_input_size"),
+        col("s.build.input_rows").as("build_input_rows"))
       .cache()
   }
 }

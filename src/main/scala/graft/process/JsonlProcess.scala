@@ -2,6 +2,7 @@ package graft.process
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import com.fasterxml.jackson.core.io.JsonStringEncoder
 
 /** Stage 2.5 (reference `jsonl_process.py`): schema filtering + name
   * obfuscation over the summary table.
@@ -279,28 +280,6 @@ object JsonlProcess {
     else firstSeenDict(names, prefix, s"$prefix dictionary")
   }
 
-  /** The compact-JSON escape of a name as Jackson stores it: the raw
-    * element carries `we\"b` for a name `get_json_object` reports as
-    * `we"b` — and `\\n`/`\\u0001` for newlines/control chars — so the
-    * literal replace must search for the ESCAPED form. Computed on the
-    * driver per dictionary entry (the dictionary already lives there),
-    * which gets full Jackson fidelity: quote, backslash, the five short
-    * escapes, and \\u00XX for the rest of the control range.
-    */
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\b' => "\\b"
-    case '\f' => "\\f"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    // UPPERCASE hex: Jackson's CharTypes emits e.g. backslash-u000B, never
-    // backslash-u000b — a lowercase search literal would silently never match
-    case c if c < ' ' => f"\\u${c.toInt}%04X"
-    case c => c.toString
-  }
-
   /** Rename schema/catalog occurrences through one shared dictionary:
     * the `key` field of raw inputs JSON (literal replace on the escaped
     * compact form — unknown fields survive untouched) and segment
@@ -319,7 +298,11 @@ object JsonlProcess {
     // on a map THROWS — and misses are normal here ('' never enters the
     // dictionary, mirroring NameObfuscator's guard; names outside the
     // dict pass through).
-    val withEsc = typedLit(dict.map { case (o, n) => o -> (n, jsonEscape(o)) })
+    // The raw element is Jackson's `JsonNode.toString`, which stores a
+    // name `get_json_object` reports as `we"b` as `we\"b`: the replace
+    // searches for the form Jackson's own escaper makes.
+    val withEsc = typedLit(dict.map { case (o, n) =>
+      o -> (n, String.valueOf(JsonStringEncoder.getInstance().quoteAsString(o))) })
     def renamed(c: Column): Column = try_element_at(withEsc, c).getField("_1")
     def putSeg(c: Column): Column = {
       val repl = renamed(seg(c, segIdx))

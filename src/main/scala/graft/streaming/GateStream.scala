@@ -34,23 +34,11 @@ object GateStream {
     * its cluster and this helper follows it downward only (never exceeds
     * the session setting).
     */
-  /** Validate the SPARK_GRAFT_STREAM_SHUFFLE override — fail loud BEFORE
-    * any streaming work, matching the convention of
-    * SPARK_GRAFT_BENCH_ONLY: a garbled value would otherwise surface as a
-    * bare NumberFormatException (or, for 0/negative, an invalid partition
-    * count) mid-gate with no pointer to the variable at fault.
+  /** The SPARK_GRAFT_STREAM_SHUFFLE override, validated BEFORE any
+    * streaming work like every positive-int knob ([[graft.Sessions.positiveInt]]).
     */
   private[graft] def parseStreamShuffleCap(v: Option[String]): Int =
-    // exported-but-blank means "no override", matching the
-    // SPARK_GRAFT_BENCH_ONLY convention this mirrors
-    v.map(_.trim).filter(_.nonEmpty).map { raw =>
-      val n = try raw.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_STREAM_SHUFFLE must be a positive int, got '$raw'")
-      }
-      require(n > 0, s"SPARK_GRAFT_STREAM_SHUFFLE must be a positive int, got $n")
-      n
-    }.getOrElse(8)
+    graft.Sessions.positiveInt("SPARK_GRAFT_STREAM_SHUFFLE", v).getOrElse(8)
 
   def streamShufflePartitions(spark: SparkSession): Int =
     math.min(parseStreamShuffleCap(sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE")),

@@ -47,19 +47,6 @@ object StreamingIngest {
       .trigger(Trigger.ProcessingTime("10 seconds"))
       .outputMode("append")
 
-  /** Streaming example of the trend analyzers (B2/B6 shape): per-hour
-    * query counts + scheduled time with a watermark on the event time
-    * derived from query_id. At scale this runs alongside the batch
-    * analyzers as the "live" dashboard feed.
-    */
-  def hourlyTrend(summaries: Dataset[QuerySummary]): DataFrame =
-    summaries.toDF()
-      .withColumn("ts", to_timestamp(substring(col("query_id"), 1, 15), "yyyyMMdd_HHmmss"))
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour").as("hour"))
-      .agg(count(lit(1)).as("n_queries"),
-        sum(col("scheduled_time")).as("scheduled_secs"))
-
   /** B1–B6 as ONE continuous windowed aggregation per time bucket
     * (`"day"` | `"hour"`) — the streaming twin of the batch trend
     * analyzers (SURVEY §2.B; the reference's `collect --loop` continuous

@@ -20,9 +20,7 @@ import graft.ml.TextOps
 object Bpe32kSheetFixtureGen {
   def main(args: Array[String]): Unit = {
     val out = "src/test/resources/bpe32k_gate"
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("bpe32k-sheet")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkSpec.session
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val vocab = Seq("sf0.001", "sf0.01", "sf0.1")

@@ -104,9 +104,7 @@ object GifBmpGateFixtureGen {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("gifbmp-fixture")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkSpec.session
     import spark.implicits._
 
     def finalize1(out: String, dirs: Seq[String]): Unit =

@@ -16,9 +16,7 @@ import graft.ingest.QueryInfoCorpus
 object IngestCensusFixtureGen {
   def main(args: Array[String]): Unit = {
     val out = "src/test/resources/ingest_census_gate"
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("ingest-census-fixture")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkSpec.session
     import spark.implicits._
     val rows = QueryInfoCorpus.expectedCensus()
       .map(r => (r.nodeType, r.nNodes, r.nQueries, r.checksum, r.tableCrcSum))

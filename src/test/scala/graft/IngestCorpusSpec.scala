@@ -65,21 +65,17 @@ class IngestCorpusSpec extends AnyFunSuite {
     // in-memory arithmetic — a few seconds, no Spark.
     val fresh = QueryInfoCorpus.expectedCensus()
       .map(r => (r.nodeType, r.nNodes, r.nQueries, r.checksum, r.tableCrcSum))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
-    try {
-      val committed = spark.read
-        .parquet(s"${graft.queries.IngestQueries.censusFixtureDir}/expected.parquet")
-        .collect()
-        .map(r => (r.getAs[String]("node_type"), r.getAs[Long]("n_nodes"),
-          r.getAs[Long]("n_queries"), r.getAs[Long]("checksum"),
-          r.getAs[Long]("table_crc_sum")))
-        .sortBy(_._1).toSeq
-      assert(committed === fresh,
-        "committed sheet drifted from QueryInfoCorpus bookkeeping — if the " +
-          "document shapes changed deliberately, bump Version and regenerate: " +
-          "sbt \"Test/runMain graft.IngestCensusFixtureGen\"")
-    } finally () // shared session semantics: do not stop a session other suites may own
+    val committed = SparkSpec.session.read
+      .parquet(s"${graft.queries.IngestQueries.censusFixtureDir}/expected.parquet")
+      .collect()
+      .map(r => (r.getAs[String]("node_type"), r.getAs[Long]("n_nodes"),
+        r.getAs[Long]("n_queries"), r.getAs[Long]("checksum"),
+        r.getAs[Long]("table_crc_sum")))
+      .sortBy(_._1).toSeq
+    assert(committed === fresh,
+      "committed sheet drifted from QueryInfoCorpus bookkeeping — if the " +
+        "document shapes changed deliberately, bump Version and regenerate: " +
+        "sbt \"Test/runMain graft.IngestCensusFixtureGen\"")
   }
 
   test("every table-handle shape resolves and is exercised") {

@@ -59,9 +59,7 @@ object JpegGateFixtureGen {
 
   def main(args: Array[String]): Unit = {
     val out = "src/test/resources/jpeg_gate"
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("jpeg-fixture")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkSpec.session
     import spark.implicits._
     val rows = (1L to NImages).map { id =>
       val bytes = encodeJpeg(id)

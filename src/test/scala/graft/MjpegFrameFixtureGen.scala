@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.ml.Multimodal
 
 /** One-shot generator for the per-frame stats sheet of the committed
@@ -16,12 +15,7 @@ import graft.ml.Multimodal
   */
 object MjpegFrameFixtureGen {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("mjpeg-frame-fixture")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = SparkSpec.session
     import spark.implicits._
     val dir = "/root/repo/src/test/resources/mjpeg_gate"
     val rows = spark.read.parquet(s"$dir/payloads.parquet")

@@ -116,9 +116,7 @@ object MjpegGateFixtureGen {
 
   def main(args: Array[String]): Unit = {
     val out = "src/test/resources/mjpeg_gate"
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("mjpeg-fixture")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkSpec.session
     import spark.implicits._
     val rows = (1L to NVideos).map { id =>
       val (w, h) = geometry(id)

@@ -215,6 +215,18 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("joins: each probe/build lookup runs once per join node") {
+    import graft.ingest.WorkloadViews
+    val v = WorkloadViews(spark.read.parquet(graft.queries.AnalyzerGates.fixtureDir))
+    v.joins.collect()
+    val plans = nodesRun(v.joins.queryExecution.executedPlan)
+      .map(_.simpleString(Int.MaxValue))
+    // one lookup over `operators` for the probe and one for the build, both
+    // inside the per-query sites array: none inlined into a pushed filter
+    val lookups = plans.map("filter\\(operators#".r.findAllMatchIn(_).size).sum
+    assert(lookups === 2, plans.mkString("\n"))
+  }
+
   test("stats_moments: one partial+final aggregation pair carries all six moments") {
     val p = plan("stats_moments")
     // moments are mergeable partials: exactly one aggregation exchange

@@ -30,18 +30,8 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      // TIMESTAMP(NANOS) parquet must be readable from first load (see
-      // Tables.ensureNanosAsLong, which only covers foreign sessions)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Two cores whatever `SPARK_GRAFT_CPUS` says, so no plan fingerprint
+    * depends on the machine.
+    */
+  lazy val session: SparkSession = Sessions.local("graft-test", cores = 2)
 }

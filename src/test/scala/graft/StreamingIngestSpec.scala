@@ -90,7 +90,8 @@ class StreamingIngestSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val stream = MemoryStream[String]
-    val trend = StreamingIngest.hourlyTrend(StreamingIngest.parseStream(stream.toDS()))
+    val trend = StreamingIngest.trendByBucket(
+      StreamingIngest.parseStream(stream.toDS()), "hour")
     val q = trend.writeStream.format("memory").queryName("trend_test")
       .outputMode("complete").start()
     try {
@@ -99,7 +100,8 @@ class StreamingIngestSpec extends SparkSpec {
       }
       q.processAllAvailable()
       val rows = spark.table("trend_test").collect()
-      assert(rows.length === 2) // 12:30 and 09:30 land in different hours
+      // both queries are FINISHED; 12:30 and 09:30 land in different hours
+      assert(rows.length === 2)
       assert(rows.map(_.getAs[Long]("n_queries")).sum === 2)
     } finally q.stop()
   }
