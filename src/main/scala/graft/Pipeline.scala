@@ -232,6 +232,10 @@ object Pipeline {
 
     case "analyze" :: in :: out :: rest =>
       val o = options("analyze", rest)
+      // unlike the reference (analyze.py:1242 compares names unchecked), an
+      // unknown `--filter` name fails instead of running nothing
+      o.value("--filter").foreach(n => require(Analyzers.all(null).contains(n),
+        s"analyze: unknown analyzer '$n' for --filter"))
       val spark = session()
       // `--limit N` keeps the first N summaries (analyze.py:1226-1227:
       // `itertools.islice(lines, limit)` BEFORE the FAILED filter). The

@@ -112,6 +112,9 @@ object Extract {
   * no exchange, and each chart runs as one-stage jobs. A large workload
   * keeps its scan parallelism and its exchanges.
   *
+  * Each view is read by two or more of the analyzers' grain jobs
+  * ([[graft.analyze.Analyzers]]), so each is cached.
+  *
   * Safe to share between concurrently running analyzers
   * ([[graft.analyze.AnalyzerRunner]]): a lazy view is initialized under
   * this instance's monitor, so concurrent first readers block on, and
@@ -120,6 +123,15 @@ object Extract {
 final class WorkloadViews private (val summaries: DataFrame) {
 
   import WorkloadViews._
+
+  private val memos = new java.util.concurrent.ConcurrentHashMap[String, Memo]()
+
+  /** `compute` (a collected grain), run once per `key` and then shared,
+    * under a lock per key: a lazy val would hold this instance's monitor
+    * for the whole Spark job and serialize every grain behind it.
+    */
+  private[graft] def memo[T](key: String)(compute: => T): T =
+    memos.computeIfAbsent(key, _ => new Memo(() => compute)).value.asInstanceOf[T]
 
   /** FAILED-filtered base (A28 — analysis side only, `analyze.py:1231-1235`),
     * with the query-id-derived event timestamp (`analyze.py:62-63`).
@@ -154,8 +166,7 @@ final class WorkloadViews private (val summaries: DataFrame) {
 
   /** Every `*Scan*` operator occurrence with its resolved plan node's
     * deepest table (A21-A23, B18/B22-24), `table_name` "" when the query
-    * has no node of that id or the node has no table. Cached once: eight
-    * analyzers read it through [[scanOps]].
+    * has no node of that id or the node has no table.
     */
   lazy val scans: DataFrame = {
     val nodes = col("nodes")
@@ -168,14 +179,6 @@ final class WorkloadViews private (val summaries: DataFrame) {
       .withColumn("table_name", coalesce(col("deepest_table"), lit("")))
       .drop("nodes")
       .cache()
-  }
-
-  /** The [[scans]] rows whose operator type contains `typeSubstring`, which
-    * must itself contain "Scan" (a narrower family such as "ScanFilter").
-    */
-  def scanOps(typeSubstring: String): DataFrame = {
-    require(typeSubstring.contains("Scan"), s"not a scan operator family: $typeSubstring")
-    scans.filter(col("operator_type").contains(typeSubstring))
   }
 
   /** Classified join sites (A24, `analyze.py:1040-1080`): per resolved
@@ -221,6 +224,9 @@ final class WorkloadViews private (val summaries: DataFrame) {
 }
 
 object WorkloadViews {
+
+  /** A value computed on first use under its own monitor (retried after a failure). */
+  private final class Memo(compute: () => Any) { lazy val value: Any = compute() }
 
   /** Declarative drift contract for the summary relation (round 14,
     * closing the round-12 ask): the expected schema IS

@@ -54,6 +54,9 @@ object AnalyzerGates {
   private def views(s: SparkSession): WorkloadViews =
     WorkloadViews(s.read.parquet(fixtureDir))
 
+  /** The registry entry `name` over the fixture. */
+  private def analyzer(s: SparkSession, name: String): DataFrame = Analyzers.all(views(s))(name)()
+
   /** Render one timestamp column to a timezone-free string (see scaladoc). */
   private def tsStr(df: DataFrame, c: String): DataFrame =
     df.withColumn(c, date_format(col(c), "yyyy-MM-dd HH:mm:ss"))
@@ -230,27 +233,27 @@ object AnalyzerGates {
     // ---- B1-B6: time-bucketed trends (`analyze.py:83-214`) -------------
     NamedQuery(
       "analyzer_scheduled_by_date",
-      (s, _) => tsStr(Analyzers.scheduledByDate(views(s)), "day"),
+      (s, _) => tsStr(analyzer(s, "scheduled_by_date"), "day"),
       Some(bucketSql("day", "SUM(scheduled_time / 86400.0)", "scheduled_days"))),
     NamedQuery(
       "analyzer_scheduled_by_hour",
-      (s, _) => tsStr(Analyzers.scheduledByHour(views(s)), "hour"),
+      (s, _) => tsStr(analyzer(s, "scheduled_by_hour"), "hour"),
       Some(bucketSql("hour", "SUM(scheduled_time / 3600.0)", "scheduled_hours"))),
     NamedQuery(
       "analyzer_input_by_date",
-      (s, _) => tsStr(Analyzers.inputByDate(views(s)), "day"),
+      (s, _) => tsStr(analyzer(s, "input_by_date"), "day"),
       Some(bucketSql("day", "SUM(input_size / 1e12)", "input_tb"))),
     NamedQuery(
       "analyzer_input_by_hour",
-      (s, _) => tsStr(Analyzers.inputByHour(views(s)), "hour"),
+      (s, _) => tsStr(analyzer(s, "input_by_hour"), "hour"),
       Some(bucketSql("hour", "SUM(input_size / 1e12)", "input_tb"))),
     NamedQuery(
       "analyzer_queries_by_date",
-      (s, _) => tsStr(Analyzers.queriesByDate(views(s)), "day"),
+      (s, _) => tsStr(analyzer(s, "queries_by_date"), "day"),
       Some(bucketSql("day", "CAST(COUNT(*) AS BIGINT)", "n_queries"))),
     NamedQuery(
       "analyzer_queries_by_hour",
-      (s, _) => tsStr(Analyzers.queriesByHour(views(s)), "hour"),
+      (s, _) => tsStr(analyzer(s, "queries_by_hour"), "hour"),
       Some(bucketSql("hour", "CAST(COUNT(*) AS BIGINT)", "n_queries"))),
 
     // The B1–B6 STREAMING twin, judged as a real streaming query (the
@@ -303,49 +306,49 @@ object AnalyzerGates {
     // ---- B7-B9, B14-B16: per-query scatters (`analyze.py:217-457`) -----
     NamedQuery(
       "analyzer_peak_mem_by_query",
-      (s, _) => tsStr(Analyzers.peakMemByQuery(views(s)), "ts"),
+      (s, _) => tsStr(analyzer(s, "peak_mem_by_query"), "ts"),
       Some(scatterSql(Seq("ts", "peak_mem", "query_id")))),
     NamedQuery(
       "analyzer_input_size_by_query",
-      (s, _) => tsStr(Analyzers.inputSizeByQuery(views(s)), "ts"),
+      (s, _) => tsStr(analyzer(s, "input_size_by_query"), "ts"),
       Some(scatterSql(Seq("ts", "input_size", "query_id")))),
     NamedQuery(
       "analyzer_elapsed_time_by_query",
-      (s, _) => tsStr(Analyzers.elapsedTimeByQuery(views(s)), "ts"),
+      (s, _) => tsStr(analyzer(s, "elapsed_time_by_query"), "ts"),
       Some(scatterSql(Seq("ts", "elapsed_time", "query_id")))),
     NamedQuery(
       "analyzer_output_vs_input",
-      (s, _) => Analyzers.outputVsInput(views(s)),
+      (s, _) => analyzer(s, "output_vs_input"),
       Some(scatterSql(Seq("input_size", "output_size", "query_id")))),
     NamedQuery(
       "analyzer_scheduled_vs_input",
-      (s, _) => Analyzers.scheduledVsInput(views(s)),
+      (s, _) => analyzer(s, "scheduled_vs_input"),
       Some(scatterSql(Seq("input_size", "scheduled_time", "query_id")))),
     NamedQuery(
       "analyzer_elapsed_vs_input",
-      (s, _) => Analyzers.elapsedVsInput(views(s)),
+      (s, _) => analyzer(s, "elapsed_vs_input"),
       Some(scatterSql(Seq("input_size", "elapsed_time", "query_id")))),
 
     // ---- B10-B13: summary-grain pies (`analyze.py:305-371`) ------------
     NamedQuery(
       "analyzer_queries_by_user",
-      (s, _) => Analyzers.queriesByUser(views(s)),
+      (s, _) => analyzer(s, "queries_by_user"),
       Some(pieSql(s"""SELECT "user" AS key, CAST(COUNT(*) AS DOUBLE) AS value
                      |  FROM $summSql GROUP BY "user"""".stripMargin))),
     NamedQuery(
       "analyzer_scheduled_by_user",
-      (s, _) => Analyzers.scheduledByUser(views(s)),
+      (s, _) => analyzer(s, "scheduled_by_user"),
       Some(pieSql(s"""SELECT "user" AS key, SUM(scheduled_time / 86400.0) AS value
                      |  FROM $summSql GROUP BY "user"""".stripMargin))),
     NamedQuery(
       "analyzer_scheduled_by_update",
-      (s, _) => Analyzers.scheduledByUpdate(views(s)),
+      (s, _) => analyzer(s, "scheduled_by_update"),
       Some(pieSql(s"""SELECT COALESCE("update", 'SELECT') AS key,
                      |    SUM(scheduled_time / 86400.0) AS value
                      |  FROM $summSql GROUP BY 1""".stripMargin))),
     NamedQuery(
       "analyzer_input_by_user",
-      (s, _) => Analyzers.inputByUser(views(s)),
+      (s, _) => analyzer(s, "input_by_user"),
       Some(pieSql(s"""SELECT "user" AS key, SUM(input_size / 1e12) AS value
                      |  FROM $summSql GROUP BY "user"""".stripMargin))),
 
@@ -355,31 +358,31 @@ object AnalyzerGates {
     // pie with top-19 + "All the rest" + residual-absorbing last percent.
     NamedQuery(
       "analyzer_operator_wall",
-      (s, _) => Analyzers.operatorWall(views(s)),
+      (s, _) => analyzer(s, "operator_wall"),
       Some(pieSql(
         s"""SELECT CAST(regexp_replace(operator_type, 'Operator', '', 'g') AS VARCHAR) AS key,
            |    wall AS value
            |  FROM ($opsSql)""".stripMargin))),
     NamedQuery(
       "analyzer_operator_input",
-      (s, _) => Analyzers.operatorInput(views(s)),
+      (s, _) => analyzer(s, "operator_input"),
       Some(pieSql(s"""SELECT operator_type AS key, input_size AS value
                      |  FROM ($opsSql)""".stripMargin))),
     NamedQuery(
       "analyzer_operator_rows",
-      (s, _) => Analyzers.operatorRows(views(s)),
+      (s, _) => analyzer(s, "operator_rows"),
       Some(pieSql(s"""SELECT operator_type AS key, CAST(input_rows AS DOUBLE) AS value
                      |  FROM ($opsSql)""".stripMargin))),
 
     // ---- B18, B24: deepest-table scan pies (`analyze.py:587-619,926-958`)
     NamedQuery(
       "analyzer_wall_by_table_scan",
-      (s, _) => Analyzers.wallByTableScan(views(s)),
+      (s, _) => analyzer(s, "wall_by_table_scan"),
       Some(pieSql(s"""SELECT table_name AS key, wall AS value
                      |  FROM ${scanOpsSql("Scan")}""".stripMargin))),
     NamedQuery(
       "analyzer_input_size_by_table_scan",
-      (s, _) => Analyzers.inputSizeByTableScan(views(s)),
+      (s, _) => analyzer(s, "input_size_by_table_scan"),
       Some(pieSql(s"""SELECT table_name AS key, input_size AS value
                      |  FROM ${scanOpsSql("Scan")}""".stripMargin))),
 
@@ -388,18 +391,18 @@ object AnalyzerGates {
     // B19: wall percent by 10-bin scan selectivity.
     NamedQuery(
       "analyzer_wall_by_selectivity_10",
-      (s, _) => Analyzers.wallBySelectivity10(views(s)),
+      (s, _) => analyzer(s, "wall_by_selectivity_10"),
       Some(selBinsSql(10, 1.0))),
     // B20: the 100-bin variant whose 1-decimal rounding quirk pads labels
     // (0.01..0.19) that real data can never hit, plus a reachable "0.20".
     NamedQuery(
       "analyzer_wall_by_selectivity_100_first_20",
-      (s, _) => Analyzers.wallBySelectivity100First20(views(s)),
+      (s, _) => analyzer(s, "wall_by_selectivity_100_first_20"),
       Some(selBinsSql(100, 0.2))),
     // B21: every *Filter* operator occurrence (not just scans).
     NamedQuery(
       "analyzer_filter_selectivity",
-      (s, _) => Analyzers.filterSelectivity(views(s)),
+      (s, _) => analyzer(s, "filter_selectivity_1"),
       Some(s"""SELECT input_rows, output_rows, query_id FROM ($opsSql)
               |WHERE operator_type LIKE '%Filter%'
               |ORDER BY query_id, input_rows, output_rows""".stripMargin)),
@@ -408,7 +411,7 @@ object AnalyzerGates {
     // top-5 cutoff provably binding (the fixture's 6th table is excluded).
     NamedQuery(
       "analyzer_walltime_vs_selectivity",
-      (s, _) => Analyzers.walltimeVsSelectivity(views(s)),
+      (s, _) => analyzer(s, "walltime_vs_selectivity"),
       Some(s"""WITH pts AS (
               |  SELECT *, CAST(output_rows AS DOUBLE) / input_rows AS selectivity
               |  FROM ${scanOpsSql("ScanFilter")} WHERE input_rows > 0
@@ -421,7 +424,7 @@ object AnalyzerGates {
               |ORDER BY query_id, table_name, selectivity, wall""".stripMargin)),
     NamedQuery(
       "analyzer_inputrows_vs_selectivity",
-      (s, _) => Analyzers.inputrowsVsSelectivity(views(s)),
+      (s, _) => analyzer(s, "inputrows_vs_selectivity"),
       Some(s"""WITH pts AS (
               |  SELECT *, CAST(output_rows AS DOUBLE) / input_rows AS selectivity
               |  FROM ${scanOpsSql("ScanFilter")} WHERE input_rows > 0
@@ -438,7 +441,7 @@ object AnalyzerGates {
     // B27: per join site, build (x) vs probe (y) input bytes + distribution.
     NamedQuery(
       "analyzer_joins_sides",
-      (s, _) => Analyzers.joinsSides(views(s)),
+      (s, _) => analyzer(s, "joins_sides"),
       Some(s"""SELECT build_input_size AS x, probe_input_size AS y,
               |  join_distribution AS dist, query_id
               |FROM $joinsSql
@@ -446,7 +449,7 @@ object AnalyzerGates {
     // B28: x = max(probe rows, build rows), y = probe output rows.
     NamedQuery(
       "analyzer_joins_selectivity",
-      (s, _) => Analyzers.joinsSelectivity(views(s)),
+      (s, _) => analyzer(s, "joins_selectivity"),
       Some(s"""SELECT GREATEST(probe_input_rows, build_input_rows) AS x,
               |  probe_output_rows AS y, query_id
               |FROM $joinsSql

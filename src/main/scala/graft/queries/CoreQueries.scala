@@ -107,8 +107,8 @@ object CoreQueries {
         // window or global row_number over the unbounded key set. The
         // bounded (≤20-row) tail is window-free too: last-row detection
         // and the rounding residual are scalar aggregates broadcast back
-        // in. (ChartOps.pie computes the same chart in bounded collects
-        // with a driver-side tail.)
+        // in. (ChartOps.pie computes the same chart on the driver from a
+        // collected per-key grain, see Analyzers.)
         val counts = Tables.events(s, d)
           .groupBy(col("user_id").cast("string").as("key"))
           .agg(count(lit(1)).as("value"))

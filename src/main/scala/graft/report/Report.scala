@@ -246,9 +246,10 @@ object Report {
     * ([[AnalyzerRunner]]) and assembled in analyzer-name order, so the
     * artifact is byte-identical across runs whatever order the analyzers
     * finish in. A failing analyzer renders as its own `failed:` section.
+    * Sections that share a grain share its one job (see [[Analyzers]]).
     */
   def render(views: WorkloadViews, colorblind: Boolean = false): String =
-    render(views, colorblind, Analyzers.all(views))
+    render(views, colorblind, Analyzers.all(views, limit = Some(101)))
 
   /** [[render]] over an explicit analyzer registry. */
   private[graft] def render(views: WorkloadViews, colorblind: Boolean,
@@ -256,8 +257,9 @@ object Report {
     val palette = if (colorblind) Colorblind8 else Category10
     val header = AnalyzerRunner.fork("metrics")(Analyzers.metrics(views).collect()(0))
     val sections = AnalyzerRunner.run(analyzers) { (name, df) =>
-      // one Spark job per analyzer: collect 101 rows, derive emptiness
-      // and truncation from that instead of a separate count()
+      // at most one Spark job per section (none for a split grain): collect
+      // 101 rows, derive emptiness and truncation from that instead of a
+      // separate count()
       val rows = df.limit(101).collect()
       if (rows.isEmpty) "<p class=\"empty\">not enough data</p>" // analyze.py:1250-1251
       else {

@@ -78,6 +78,15 @@ class EntryPointsSpec extends AnyFunSuite {
     assert(rejects("collect", "--delay").contains("--delay needs a value"))
   }
 
+  test("analyze --filter: a name that is no analyzer fails and is named") {
+    // the reference runs nothing and exits 0 (analyze.py:1242); the input
+    // path does not exist, so reaching a session would fail differently
+    val e = intercept[IllegalArgumentException](Pipeline.main(Array(
+      "analyze", "no/such/summaries", "no/such/out", "--filter", "nosuch")))
+    assert(e.getMessage.contains("'nosuch'"), e.getMessage)
+    assert(graft.analyze.Analyzers.all(null).contains("operator_wall"))
+  }
+
   test("options: values in any position, repeatable flags kept in order") {
     val e = Pipeline.options("extract", List("--limit", "7"))
     assert(e.value("--limit") === Some("7"))

@@ -77,7 +77,7 @@ class ExtractSpec extends SparkSpec {
   }
 
   test("scan ops resolve to deepest table (A22/A23)") {
-    val scans = views.scanOps("Scan")
+    val scans = views.scans
       .select("node_id", "table_name").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(scans === Set(

@@ -54,7 +54,7 @@ class GateFixtureSpec extends SparkSpec {
   }
 
   test("operator_wall over the fixture hits the designed exact pie") {
-    val rows = Analyzers.operatorWall(WorkloadViews(committed)).collect()
+    val rows = Analyzers.all(WorkloadViews(committed))("operator_wall")().collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).toSeq
     assert(rows === Seq(
       ("ScanFilterAndProject", 330.0, 41.25),
@@ -73,7 +73,7 @@ class GateFixtureSpec extends SparkSpec {
   }
 
   test("joins_sides classifies all three families + dup-operator last-wins") {
-    val rows = Analyzers.joinsSides(WorkloadViews(committed)).collect()
+    val rows = Analyzers.all(WorkloadViews(committed))("joins_sides")().collect()
       .map(r => (r.getDouble(0), r.getDouble(1), r.getString(2))).toSeq
     val mb = 1048576.0
     assert(rows === Seq(
@@ -87,7 +87,7 @@ class GateFixtureSpec extends SparkSpec {
   }
 
   test("wall_by_selectivity_10 bins sum to exactly 100 with designed shares") {
-    val rows = Analyzers.wallBySelectivity10(WorkloadViews(committed)).collect()
+    val rows = Analyzers.all(WorkloadViews(committed))("wall_by_selectivity_10")().collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(rows === Map(
       "0.00" -> 45.0, "0.10" -> 0.0, "0.20" -> 7.5, "0.30" -> 0.0,
@@ -97,7 +97,7 @@ class GateFixtureSpec extends SparkSpec {
   }
 
   test("top-5 ScanFilter tables exclude the designed 6th (warehouse.dims)") {
-    val tables = Analyzers.walltimeVsSelectivity(WorkloadViews(committed))
+    val tables = Analyzers.all(WorkloadViews(committed))("walltime_vs_selectivity")()
       .select("table_name").collect().map(_.getString(0)).toSet
     assert(tables === Set("hive.web.users", "hive.sales.items",
       "iceberg.raw.events", "iceberg.raw.clicks", "hive.sales.orders"))

@@ -30,9 +30,10 @@ class PlanFingerprintSpec extends SparkSpec {
     // pinned via dedup_simhash's own fingerprint)
     val got = SparkEntry.queries.keys.toSeq.sorted.map { n =>
       // cache-clean per gate, mirroring Bench's per-gate clearCache():
-      // pie-family gates materialize a bounded cache at construction, and
-      // a later gate sharing that subtree would otherwise fingerprint an
-      // InMemoryRelation swap-in that depends on loop order, not its plan
+      // analyzer gates run their grain at construction, which fills the
+      // cached views, and a later gate sharing that subtree would otherwise
+      // fingerprint an InMemoryRelation swap-in that depends on loop order,
+      // not its plan
       spark.catalog.clearCache()
       val df = SparkEntry.queries(n)(spark, d)
       sys.env.get("SPARK_GRAFT_FP_DUMP").foreach { dir =>
@@ -41,22 +42,15 @@ class PlanFingerprintSpec extends SparkSpec {
           PlanFingerprint.normalize(PlanFingerprint.planString(df)))
       }
       n -> PlanFingerprint.of(df)
-    } :+ {
-      // the pie gates' judged plans end at the bounded driver tail, so
-      // drift in the plans the pie runs over its workload-sized input
-      // (scalar total / TakeOrdered / remainder sum over the cached per-key
-      // aggregate) is invisible to their fingerprints; pin them here for
-      // one representative pie input (the B25 operator-input pie's counts
-      // over the workload fixture)
+    } ++ {
+      // the analyzer gates split from a grain judge a local relation, so
+      // drift in the grain plans that run over the workload-sized input
+      // is invisible to their fingerprints; pin each grain here, over the
+      // workload fixture
       spark.catalog.clearCache()
-      val counts = graft.ingest
-        .WorkloadViews(spark.read.parquet(graft.queries.AnalyzerGates.fixtureDir))
-        .operators.groupBy(org.apache.spark.sql.functions.col("operator_type"))
-        .agg(org.apache.spark.sql.functions.sum(
-          org.apache.spark.sql.functions.col("input_size")).as("value"))
-      val qes = executionsOf(graft.analyze.ChartOps.pie(counts, "operator_type", "value", 20))
-      "_pie_distributed_operator_input" -> PlanFingerprint.digest(PlanFingerprint
-        .untruncated(spark)(qes.map(_.executedPlan.toString).mkString("\n")))
+      val v = graft.ingest.WorkloadViews(spark.read.parquet(graft.queries.AnalyzerGates.fixtureDir))
+      graft.analyze.Analyzers.grains(v).toSeq.sortBy(_._1)
+        .map { case (n, g) => s"_grain_$n" -> PlanFingerprint.of(g) }
     }
     if (sys.env.get("SPARK_GRAFT_REGEN_FINGERPRINTS").contains("1")) {
       Files.createDirectories(snapshot.getParent)

@@ -76,12 +76,12 @@ class StreamingIngestSpec extends SparkSpec {
       spark.table(s"trend_twin_$bucket")
         .select(col(bucket), col(measure)).orderBy(col(bucket))
     // six exact twins: same bucket timestamps, same measure values
-    assert(rows(twin("day", "scheduled_days")) === rows(Analyzers.scheduledByDate(v)))
-    assert(rows(twin("hour", "scheduled_hours")) === rows(Analyzers.scheduledByHour(v)))
-    assert(rows(twin("day", "input_tb")) === rows(Analyzers.inputByDate(v)))
-    assert(rows(twin("hour", "input_tb")) === rows(Analyzers.inputByHour(v)))
-    assert(rows(twin("day", "n_queries")) === rows(Analyzers.queriesByDate(v)))
-    assert(rows(twin("hour", "n_queries")) === rows(Analyzers.queriesByHour(v)))
+    assert(rows(twin("day", "scheduled_days")) === rows(Analyzers.all(v)("scheduled_by_date")()))
+    assert(rows(twin("hour", "scheduled_hours")) === rows(Analyzers.all(v)("scheduled_by_hour")()))
+    assert(rows(twin("day", "input_tb")) === rows(Analyzers.all(v)("input_by_date")()))
+    assert(rows(twin("hour", "input_tb")) === rows(Analyzers.all(v)("input_by_hour")()))
+    assert(rows(twin("day", "n_queries")) === rows(Analyzers.all(v)("queries_by_date")()))
+    assert(rows(twin("hour", "n_queries")) === rows(Analyzers.all(v)("queries_by_hour")()))
     // and the data was non-trivial: multiple buckets on both grains
     assert(spark.table("trend_twin_hour").count() >= 2)
   }
