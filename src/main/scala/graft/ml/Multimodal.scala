@@ -14,15 +14,18 @@ import org.apache.spark.sql.functions._
   *  - records are co-partitioned by `media_id` before feature extraction so
   *    a downstream join against labels/captions is shuffle-free.
   *
-  * Five codecs are REAL (pure JVM, no native deps), each judged by its
+  * Seven codecs are REAL (pure JVM, no native deps), each judged by its
   * own gate against a DuckDB oracle: [[decodeWav]] (RIFF/WAVE chunk walk
   * + LE PCM16), [[decodePpm]] (Netpbm P6 header tokenizer),
   * [[decodePng]] (chunk walk + CRC32 + zlib inflate + per-scanline
   * unfilter — a genuinely COMPRESSED format, so the "swap in a real
   * codec" boundary is proven on entropy-coded payloads, not just byte
-  * walks), [[decodeJpeg]] (baseline JPEG via the JDK's javax.imageio),
-  * and [[decodeMjpegAvi]] (Motion-JPEG video: AVI/RIFF container walk +
-  * one JPEG decode per frame). Everything else falls back to
+  * walks), [[decodeJpeg]] (baseline JPEG), [[decodeGif]] (animated
+  * palette GIF, every frame) and [[decodeBmp]] (uncompressed truecolor)
+  * — the three share one javax.imageio reader, [[readImageIO]] — and
+  * [[decodeMjpegAvi]] (Motion-JPEG video: AVI/RIFF container walk + one
+  * JPEG decode per frame). Every image codec sums its pixels through one
+  * accumulator, [[PixelSums]]. Everything else falls back to
   * [[decodeStub]], the deterministic byte-histogram stand-in for the
   * codecs the JVM cannot decode without native deps (H.264/H.265/...).
   * Swap the fallback for a real decoder (JNI/ffmpeg) without touching
@@ -53,6 +56,30 @@ object Multimodal {
       duration_ms: Option[Long] = None)
 
   val FeatureDim = 16
+
+  /** Exact integer channel sums and the [[FeatureDim]]-bin histogram of
+    * 8-bit samples — the one pixel accumulator of every image codec here
+    * and of the MJPEG frame merge.
+    */
+  private final class PixelSums {
+    val sums = new Array[Long](3)
+    val hist = new Array[Long](FeatureDim)
+
+    def add(channel: Int, v: Int): Unit = {
+      sums(channel) += v
+      hist(v * FeatureDim / 256) += 1
+    }
+
+    def addRgb(px: Int): Unit = {
+      add(0, (px >> 16) & 0xff); add(1, (px >> 8) & 0xff); add(2, px & 0xff)
+    }
+
+    def merge(r: RasterInfo): Unit = {
+      sums(0) += r.rSum; sums(1) += r.gSum; sums(2) += r.bSum
+      var k = 0
+      while (k < FeatureDim) { hist(k) += r.hist(k); k += 1 }
+    }
+  }
 
   /** Decoded WAV metadata + exact integer sample statistics. Stats are
     * integers (sums, not means) so the judged gate's oracle compare is
@@ -324,16 +351,13 @@ object Multimodal {
   private[graft] def decodePpm(b: Array[Byte]): Option[PpmInfo] =
     findPpmRaster(b).map { case (w, h, m, off) =>
       val n = w * h
-      val sums = new Array[Long](3)
-      val hist = new Array[Long](FeatureDim)
+      val acc = new PixelSums
       var i = 0L
       while (i < 3 * n) {
-        val v = b(off + i.toInt) & 0xff
-        sums((i % 3).toInt) += v
-        hist(v * FeatureDim / 256) += 1
+        acc.add((i % 3).toInt, b(off + i.toInt) & 0xff)
         i += 1
       }
-      PpmInfo(w, h, m, sums(0), sums(1), sums(2), hist)
+      PpmInfo(w, h, m, acc.sums(0), acc.sums(1), acc.sums(2), acc.hist)
     }
 
   /** Block-mean downsample numerators over the same validated raster: a
@@ -497,8 +521,7 @@ object Multimodal {
       case _: java.util.zip.DataFormatException => return None
     } finally inf.end()
     // per-scanline unfilter; prev row is all-zero for y = 0 by PNG spec
-    val sums = new Array[Long](3)
-    val hist = new Array[Long](FeatureDim)
+    val acc = new PixelSums
     val prev = new Array[Int](3 * w)
     val cur = new Array[Int](3 * w)
     var y = 0
@@ -526,14 +549,13 @@ object Multimodal {
             (f + pred) & 0xff
         }
         cur(x) = rec
-        sums(x % 3) += rec
-        hist(rec * FeatureDim / 256) += 1
+        acc.add(x % 3, rec)
         x += 1
       }
       System.arraycopy(cur, 0, prev, 0, 3 * w)
       y += 1
     }
-    Some(PngInfo(w, h, 8, sums(0), sums(1), sums(2), hist))
+    Some(PngInfo(w, h, 8, acc.sums(0), acc.sums(1), acc.sums(2), acc.hist))
   }
 
   /** Deterministic PNG payload for the judged gate: geometry and every
@@ -605,35 +627,44 @@ object Multimodal {
       chunk("IEND", Array.emptyByteArray)
   }
 
-  /** Decoded JPEG metadata + integer channel sums over the DECODED
-    * pixels. Unlike PNG, JPEG's DCT quantization is lossy, so the sums
-    * are a property of the (deterministic) decoder output, not of the
-    * source pixels — the judged fixture therefore commits the expected
-    * stats alongside the payloads (the AnalyzerGates fixture-oracle
-    * pattern) instead of recomputing them analytically.
+  /** Decoded raster metadata + integer channel sums over the DECODED
+    * pixels of every frame read — what [[decodeJpeg]], [[decodeGif]] and
+    * [[decodeBmp]] return (`nFrames` = 1 for the single-frame formats).
+    * JPEG's DCT quantization is lossy, so its sums are a property of the
+    * (deterministic) decoder output, not of the source pixels — the
+    * judged fixtures therefore commit the expected stats alongside the
+    * payloads (the AnalyzerGates fixture-oracle pattern). The GIF fixture
+    * is palette-bounded and BMP is uncompressed 24-bit, so both encodes
+    * are lossless and their decoded sums equal the source pixels exactly
+    * (GifBmpGateSpec pins that, a stronger bound than JPEG's closeness).
     */
-  final case class JpegInfo(
+  final case class RasterInfo(
       width: Long,
       height: Long,
+      nFrames: Long,
       rSum: Long,
       gSum: Long,
       bSum: Long,
       hist: Array[Long])
 
-  /** REAL decode for the fourth public format: baseline JPEG via the
-    * JDK's own `javax.imageio` reader — public API, pure JVM, no native
-    * deps beyond the JRE (the judge-prescribed route for DCT codecs the
-    * container can't host native libs for). The SOI magic is checked
-    * first so the dispatch never mistakes another ImageIO-supported
-    * format for JPEG, and width/height come from the HEADER (ImageReader)
-    * before any pixel decode, so a crafted giant image is rejected ahead
-    * of allocation — same untrusted-input posture as [[decodePng]].
-    * Returns None for anything malformed: bad magic, unsupported color
-    * space (CMYK), truncated entropy stream, oversized dimensions.
+  /** The one javax.imageio read loop: the JDK's own readers — public API,
+    * pure JVM, no native deps beyond the JRE (the route for DCT and LZW
+    * codecs the container can't host native libs for). Reads frame 0
+    * only, or with `allFrames` every animation frame
+    * (`getNumImages(forceRead)` + per-index reads — the image-side analog
+    * of the MJPEG frame loop). Untrusted-input posture of [[decodePng]]:
+    * width/height come from the HEADER before any pixel decode and cap
+    * the pixel count at 2^26, the frame count is capped at 4096 and
+    * frames × pixels at 2^26 before any decode, and a frame whose stored
+    * raster differs from frame 0's size marks the payload malformed
+    * (delta-composited GIFs are out of the judged contract, like
+    * non-baseline JPEG). None on any exception — corrupt entropy streams
+    * surface as IIOException/IOException/runtime errors from deep inside
+    * the reader, and a Spark task must never throw on malformed input.
+    * The callers check their own magic first, so the dispatch never
+    * mistakes another ImageIO-supported format for theirs.
     */
-  private[graft] def decodeJpeg(b: Array[Byte]): Option[JpegInfo] = {
-    if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8 ||
-      (b(2) & 0xff) != 0xff) return None
+  private def readImageIO(b: Array[Byte], allFrames: Boolean): Option[RasterInfo] =
     try {
       javax.imageio.ImageIO.setUseCache(false) // no disk-cache temp files in executors
       val iis = javax.imageio.ImageIO
@@ -643,92 +674,14 @@ object Multimodal {
         if (!readers.hasNext) return None
         val reader = readers.next()
         try {
-          reader.setInput(iis, true, true)
-          val w = reader.getWidth(0)
-          val h = reader.getHeight(0)
-          // header-declared dimensions guard the pixel-decode allocation
-          if (w <= 0 || h <= 0 || w.toLong * h > (1L << 26)) return None
-          val img = reader.read(0)
-          val sums = new Array[Long](3)
-          val hist = new Array[Long](FeatureDim)
-          val row = new Array[Int](w)
-          var y = 0
-          while (y < h) {
-            img.getRGB(0, y, w, 1, row, 0, w)
-            var x = 0
-            while (x < w) {
-              val px = row(x)
-              val r = (px >> 16) & 0xff
-              val g = (px >> 8) & 0xff
-              val bl = px & 0xff
-              sums(0) += r; sums(1) += g; sums(2) += bl
-              hist(r * FeatureDim / 256) += 1
-              hist(g * FeatureDim / 256) += 1
-              hist(bl * FeatureDim / 256) += 1
-              x += 1
-            }
-            y += 1
-          }
-          Some(JpegInfo(w, h, sums(0), sums(1), sums(2), hist))
-        } finally reader.dispose()
-      } finally if (iis != null) iis.close()
-    } catch {
-      // corrupt entropy streams surface as IIOException/IOException/
-      // runtime errors from deep inside the reader; malformed ⇒ None,
-      // never a thrown error in a Spark task
-      case _: Exception => None
-    }
-  }
-
-  /** Decoded GIF metadata + integer channel sums over ALL frames — the
-    * palette-format twin of [[MjpegInfo]] (multi-frame, but LZW+palette
-    * instead of DCT: the committed fixture is palette-bounded, so the
-    * encode is lossless and the decoded sums equal the source pixels
-    * exactly — GifBmpGateSpec pins that, a stronger bound than JPEG's
-    * closeness one).
-    */
-  final case class GifInfo(
-      width: Long,
-      height: Long,
-      nFrames: Long,
-      rSum: Long,
-      gSum: Long,
-      bSum: Long,
-      hist: Array[Long])
-
-  /** REAL decode for the sixth public format — the first PALETTE one:
-    * GIF87a/GIF89a via the JDK's `javax.imageio`, ALL animation frames
-    * decoded (`getNumImages(forceRead)` + per-index reads — the
-    * image-side analog of the MJPEG frame loop). Magic is checked first
-    * so dispatch never misroutes; header geometry guards the pixel
-    * allocation per frame and the frame count is bounded before any
-    * decode (untrusted-input posture of [[decodePng]]). Frames whose
-    * stored raster differs from frame 0's logical size mark the payload
-    * malformed (the fixture writes full frames; delta-composited GIFs
-    * are out of the judged contract, like non-baseline JPEG). Returns
-    * None on anything malformed, never a throw in a Spark task.
-    */
-  private[graft] def decodeGif(b: Array[Byte]): Option[GifInfo] = {
-    if (b.length < 6 || b(0) != 'G' || b(1) != 'I' || b(2) != 'F' ||
-      b(3) != '8' || (b(4) != '7' && b(4) != '9') || b(5) != 'a') return None
-    try {
-      javax.imageio.ImageIO.setUseCache(false)
-      val iis = javax.imageio.ImageIO
-        .createImageInputStream(new java.io.ByteArrayInputStream(b))
-      try {
-        val readers = javax.imageio.ImageIO.getImageReaders(iis)
-        if (!readers.hasNext) return None
-        val reader = readers.next()
-        try {
-          reader.setInput(iis, false, true) // seekForwardOnly=false: frame loop
-          val n = reader.getNumImages(true)
+          reader.setInput(iis, !allFrames, true) // the frame loop seeks back
+          val n = if (allFrames) reader.getNumImages(true) else 1
           if (n <= 0 || n > 4096) return None
           val w = reader.getWidth(0)
           val h = reader.getHeight(0)
           if (w <= 0 || h <= 0 || w.toLong * h > (1L << 26) ||
             w.toLong * h * n > (1L << 26)) return None
-          val sums = new Array[Long](3)
-          val hist = new Array[Long](FeatureDim)
+          val acc = new PixelSums
           val row = new Array[Int](w)
           var f = 0
           while (f < n) {
@@ -738,93 +691,47 @@ object Multimodal {
             while (y < h) {
               img.getRGB(0, y, w, 1, row, 0, w)
               var x = 0
-              while (x < w) {
-                val px = row(x)
-                val r = (px >> 16) & 0xff
-                val g = (px >> 8) & 0xff
-                val bl = px & 0xff
-                sums(0) += r; sums(1) += g; sums(2) += bl
-                hist(r * FeatureDim / 256) += 1
-                hist(g * FeatureDim / 256) += 1
-                hist(bl * FeatureDim / 256) += 1
-                x += 1
-              }
+              while (x < w) { acc.addRgb(row(x)); x += 1 }
               y += 1
             }
             f += 1
           }
-          Some(GifInfo(w, h, n, sums(0), sums(1), sums(2), hist))
+          Some(RasterInfo(w, h, n, acc.sums(0), acc.sums(1), acc.sums(2), acc.hist))
         } finally reader.dispose()
       } finally if (iis != null) iis.close()
     } catch {
       case _: Exception => None
     }
-  }
 
-  /** Decoded BMP metadata + integer channel sums — the LOSSLESS
-    * truecolor sibling of [[JpegInfo]]: a 24-bit BMP round-trips pixels
-    * bit-exactly, so decoded sums equal the source's (GifBmpGateSpec
-    * pins exact equality — the bound no fake decoder can meet).
+  /** REAL decode for the fourth public format: baseline JPEG, frame 0 of
+    * [[readImageIO]] after the SOI magic. Returns None for anything
+    * malformed: bad magic, unsupported color space (CMYK), truncated
+    * entropy stream, oversized dimensions.
     */
-  final case class BmpInfo(
-      width: Long,
-      height: Long,
-      rSum: Long,
-      gSum: Long,
-      bSum: Long,
-      hist: Array[Long])
+  private[graft] def decodeJpeg(b: Array[Byte]): Option[RasterInfo] =
+    if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8 ||
+      (b(2) & 0xff) != 0xff) None
+    else readImageIO(b, allFrames = false)
 
-  /** REAL decode for the seventh public format: BMP via `javax.imageio`
-    * — single-frame, uncompressed truecolor. Same posture as
-    * [[decodeJpeg]]: magic first ('BM' + a plausible header length),
-    * header geometry guards the allocation, None on malformed.
+  /** REAL decode for the sixth public format — the first PALETTE one:
+    * GIF87a/GIF89a, ALL animation frames of [[readImageIO]] after the
+    * magic. None on anything malformed, never a throw in a Spark task.
     */
-  private[graft] def decodeBmp(b: Array[Byte]): Option[BmpInfo] = {
-    if (b.length < 54 || b(0) != 'B' || b(1) != 'M') return None
-    try {
-      javax.imageio.ImageIO.setUseCache(false)
-      val iis = javax.imageio.ImageIO
-        .createImageInputStream(new java.io.ByteArrayInputStream(b))
-      try {
-        val readers = javax.imageio.ImageIO.getImageReaders(iis)
-        if (!readers.hasNext) return None
-        val reader = readers.next()
-        try {
-          reader.setInput(iis, true, true)
-          val w = reader.getWidth(0)
-          val h = reader.getHeight(0)
-          if (w <= 0 || h <= 0 || w.toLong * h > (1L << 26)) return None
-          val img = reader.read(0)
-          val sums = new Array[Long](3)
-          val hist = new Array[Long](FeatureDim)
-          val row = new Array[Int](w)
-          var y = 0
-          while (y < h) {
-            img.getRGB(0, y, w, 1, row, 0, w)
-            var x = 0
-            while (x < w) {
-              val px = row(x)
-              val r = (px >> 16) & 0xff
-              val g = (px >> 8) & 0xff
-              val bl = px & 0xff
-              sums(0) += r; sums(1) += g; sums(2) += bl
-              hist(r * FeatureDim / 256) += 1
-              hist(g * FeatureDim / 256) += 1
-              hist(bl * FeatureDim / 256) += 1
-              x += 1
-            }
-            y += 1
-          }
-          Some(BmpInfo(w, h, sums(0), sums(1), sums(2), hist))
-        } finally reader.dispose()
-      } finally if (iis != null) iis.close()
-    } catch {
-      case _: Exception => None
-    }
-  }
+  private[graft] def decodeGif(b: Array[Byte]): Option[RasterInfo] =
+    if (b.length < 6 || b(0) != 'G' || b(1) != 'I' || b(2) != 'F' ||
+      b(3) != '8' || (b(4) != '7' && b(4) != '9') || b(5) != 'a') None
+    else readImageIO(b, allFrames = true)
+
+  /** REAL decode for the seventh public format: BMP — single-frame,
+    * uncompressed truecolor, frame 0 of [[readImageIO]] after the magic
+    * ('BM' + a plausible header length). None on malformed.
+    */
+  private[graft] def decodeBmp(b: Array[Byte]): Option[RasterInfo] =
+    if (b.length < 54 || b(0) != 'B' || b(1) != 'M') None
+    else readImageIO(b, allFrames = false)
 
   /** Decoded MJPEG-in-AVI metadata + integer channel sums over all
-    * DECODED frames — the VIDEO sibling of [[JpegInfo]]. Like JPEG (whose
+    * DECODED frames — the VIDEO sibling of [[RasterInfo]]. Like JPEG (whose
     * decoder runs per frame) the DCT round-trip is lossy, so stats are a
     * property of the decoder output and the judged fixture commits the
     * expected stats beside the payloads.
@@ -952,8 +859,8 @@ object Multimodal {
     * (the original decoder's posture, shared by both consumers).
     */
   private def decodeFrames(b: Array[Byte], width: Long, height: Long,
-      slices: IndexedSeq[(Int, Int)]): Option[IndexedSeq[JpegInfo]] = {
-    val out = Vector.newBuilder[JpegInfo]
+      slices: IndexedSeq[(Int, Int)]): Option[IndexedSeq[RasterInfo]] = {
+    val out = Vector.newBuilder[RasterInfo]
     var f = 0
     while (f < slices.length) {
       val (foff, flen) = slices(f)
@@ -970,16 +877,11 @@ object Multimodal {
     findMjpegFrames(b).flatMap { meta =>
       val (width, height, usPerFrame, slices) = meta
       decodeFrames(b, width, height, slices).map { frames =>
-        val sums = new Array[Long](3)
-        val hist = new Array[Long](FeatureDim)
-        frames.foreach { j =>
-          sums(0) += j.rSum; sums(1) += j.gSum; sums(2) += j.bSum
-          var k = 0
-          while (k < FeatureDim) { hist(k) += j.hist(k); k += 1 }
-        }
+        val acc = new PixelSums
+        frames.foreach(acc.merge)
         val n = slices.length.toLong
         MjpegInfo(width, height, n, n * usPerFrame / 1000L,
-          sums(0), sums(1), sums(2), hist)
+          acc.sums(0), acc.sums(1), acc.sums(2), acc.hist)
       }
     }
 
@@ -1020,52 +922,39 @@ object Multimodal {
     if (norm == 0f) acc else acc.map(_ / norm)
   }
 
-  /** Decode dispatch: real WAV/PPM/PNG/JPEG/GIF/BMP/MJPEG-AVI parse when
-    * the payload is one, byte-histogram stub otherwise (the stub now
-    * covers ONLY H.264/H.265-class codecs the JVM cannot decode without
-    * native libraries — compressed images, palette images AND
+  private type Decoded = (Array[Float], Option[Long], Option[Long], Option[Long])
+
+  private def image(hist: Array[Long], width: Long, height: Long): Decoded =
+    (normed(hist), Some(width), Some(height), None)
+
+  /** The decoders [[decode]] tries, in order: the first hit wins, and the
+    * stub, which takes anything, comes last. Each decoder checks its own
+    * magic bytes first (the two RIFF formats disambiguate on the form
+    * type at offset 8), so the order can't misroute a payload.
+    */
+  private val decoders: Seq[Array[Byte] => Option[Decoded]] = Seq(
+    b => decodeWav(b).map(w => (normed(w.hist), None, None, Some(w.durationMs))),
+    b => decodeMjpegAvi(b).map(v =>
+      (normed(v.hist), Some(v.width), Some(v.height), Some(v.durationMs))),
+    b => decodePpm(b).map(p => image(p.hist, p.width, p.height)),
+    b => decodePng(b).map(p => image(p.hist, p.width, p.height)),
+    b => decodeJpeg(b).map(r => image(r.hist, r.width, r.height)),
+    b => decodeGif(b).map(r => image(r.hist, r.width, r.height)),
+    b => decodeBmp(b).map(r => image(r.hist, r.width, r.height)),
+    b => Some((decodeStub(b), None, None, None)))
+
+  /** Decode dispatch over [[decoders]]: real WAV/MJPEG-AVI/PPM/PNG/JPEG/
+    * GIF/BMP parse when the payload is one, byte-histogram stub otherwise
+    * (the stub covers ONLY H.264/H.265-class codecs the JVM cannot decode
+    * without native libraries — compressed images, palette images AND
     * Motion-JPEG video are handled for real). Every path emits an
     * L2-normalized FeatureDim vector, so downstream similarity code
     * never branches on the codec; the real codecs additionally surface
     * their typed metadata (duration for audio, geometry for images,
-    * both for video) in one pass. Each decoder checks its own magic
-    * bytes first (the two RIFF formats disambiguate on the form type at
-    * offset 8), so the dispatch order can't misroute a payload.
+    * both for video) in one pass.
     */
-  private[ml] def decode(payload: Array[Byte])
-      : (Array[Float], Option[Long], Option[Long], Option[Long]) =
-    decodeWav(payload) match {
-      case Some(w) => (normed(w.hist), None, None, Some(w.durationMs))
-      case None =>
-        decodeMjpegAvi(payload) match {
-          case Some(v) =>
-            (normed(v.hist), Some(v.width), Some(v.height), Some(v.durationMs))
-          case None =>
-            decodePpm(payload) match {
-              case Some(p) => (normed(p.hist), Some(p.width), Some(p.height), None)
-              case None =>
-                decodePng(payload) match {
-                  case Some(p) => (normed(p.hist), Some(p.width), Some(p.height), None)
-                  case None =>
-                    decodeJpeg(payload) match {
-                      case Some(j) =>
-                        (normed(j.hist), Some(j.width), Some(j.height), None)
-                      case None =>
-                        decodeGif(payload) match {
-                          case Some(g) =>
-                            (normed(g.hist), Some(g.width), Some(g.height), None)
-                          case None =>
-                            decodeBmp(payload) match {
-                              case Some(p) =>
-                                (normed(p.hist), Some(p.width), Some(p.height), None)
-                              case None => (decodeStub(payload), None, None, None)
-                            }
-                        }
-                    }
-                }
-            }
-        }
-    }
+  private[ml] def decode(payload: Array[Byte]): Decoded =
+    decoders.iterator.flatMap(_(payload)).next()
 
   /** "Frame sampling": n evenly spaced byte offsets (a video decoder would
     * seek keyframes; the offsets contract is identical).

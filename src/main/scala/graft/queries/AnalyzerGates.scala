@@ -31,19 +31,9 @@ import graft.ingest.WorkloadViews
   */
 object AnalyzerGates {
 
-  /** Committed fixture location. Resolution order: system property
-    * (testable in-JVM) → env var → the fixture on the classpath (any
-    * checkout's test run finds its own copy under target/test-classes;
-    * only file: URLs qualify — parquet cannot be read out of a jar entry)
-    * → the absolute repo path the driver's out-of-JVM DuckDB run needs.
-    */
-  def fixtureDir: String =
-    sys.props.get("graft.gate.fixtureDir")
-      .orElse(sys.env.get("GRAFT_GATE_FIXTURE_DIR"))
-      .orElse(Option(getClass.getResource("/workload_gate_parquet"))
-        .filter(_.getProtocol == "file")
-        .map(u => java.nio.file.Paths.get(u.toURI).toString))
-      .getOrElse("/root/repo/src/test/resources/workload_gate_parquet")
+  /** Committed fixture location ([[QueryDsl.fixtureDir]]). */
+  def fixtureDir: String = QueryDsl.fixtureDir(
+    "workload_gate_parquet", "graft.gate.fixtureDir", "GRAFT_GATE_FIXTURE_DIR")
   private def P = s"$fixtureDir/*.parquet"
 
   // Per-gate construction is deliberate (no cross-call memo): Spark's

@@ -26,16 +26,9 @@ object CurationQueries {
     */
   private val SpanK = 8
 
-  /** Committed 32k-BPE encode-sheet fixture — the AnalyzerGates.fixtureDir
-    * resolution order (see `text_tokenize_bpe_32k`).
-    */
-  private[graft] def bpe32kFixtureDir: String =
-    sys.props.get("graft.gate.bpe32kFixtureDir")
-      .orElse(sys.env.get("GRAFT_BPE32K_FIXTURE_DIR"))
-      .orElse(Option(getClass.getResource("/bpe32k_gate"))
-        .filter(_.getProtocol == "file")
-        .map(u => java.nio.file.Paths.get(u.toURI).toString))
-      .getOrElse("/root/repo/src/test/resources/bpe32k_gate")
+  /** Committed 32k-BPE encode-sheet fixture (see `text_tokenize_bpe_32k`). */
+  private[graft] def bpe32kFixtureDir: String = QueryDsl.fixtureDir(
+    "bpe32k_gate", "graft.gate.bpe32kFixtureDir", "GRAFT_BPE32K_FIXTURE_DIR")
 
   /** Doc-df cap for the source-overlap matrix's word 8-grams: a gram in
     * more docs than this is boilerplate (matches everything, carries no

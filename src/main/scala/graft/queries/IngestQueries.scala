@@ -31,16 +31,9 @@ import graft.ingest.{Extract, QueryInfoCorpus}
   */
 object IngestQueries {
 
-  /** Committed expected-census sheet — the AnalyzerGates.fixtureDir
-    * resolution order.
-    */
-  def censusFixtureDir: String =
-    sys.props.get("graft.gate.ingestCensusFixtureDir")
-      .orElse(sys.env.get("GRAFT_INGEST_CENSUS_FIXTURE_DIR"))
-      .orElse(Option(getClass.getResource("/ingest_census_gate"))
-        .filter(_.getProtocol == "file")
-        .map(u => java.nio.file.Paths.get(u.toURI).toString))
-      .getOrElse("/root/repo/src/test/resources/ingest_census_gate")
+  /** Committed expected-census sheet. */
+  def censusFixtureDir: String = QueryDsl.fixtureDir("ingest_census_gate",
+    "graft.gate.ingestCensusFixtureDir", "GRAFT_INGEST_CENSUS_FIXTURE_DIR")
 
   val all: Seq[NamedQuery] = Seq(
     NamedQuery(

@@ -343,51 +343,43 @@ object MLQueries {
        |FROM $from k LEFT JOIN docbpe_c b USING (doc_id)
        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  /** Committed JPEG gate fixture location (payloads + expected stats
-    * parquet) — the [[AnalyzerGates.fixtureDir]] resolution order:
-    * system property → env var → classpath (test runs) → the absolute
-    * repo path the driver's out-of-JVM DuckDB oracle run needs.
+  /** Committed codec gate fixtures (payloads + expected stats parquet),
+    * resolved by [[QueryDsl.fixtureDir]].
     */
   private[graft] def jpegFixtureDir: String =
-    sys.props.get("graft.gate.jpegFixtureDir")
-      .orElse(sys.env.get("GRAFT_JPEG_FIXTURE_DIR"))
-      .orElse(Option(getClass.getResource("/jpeg_gate"))
-        .filter(_.getProtocol == "file")
-        .map(u => java.nio.file.Paths.get(u.toURI).toString))
-      .getOrElse("/root/repo/src/test/resources/jpeg_gate")
-
-  /** Committed MJPEG-in-AVI gate fixture location — same resolution
-    * order as [[jpegFixtureDir]].
-    */
+    fixtureDir("jpeg_gate", "graft.gate.jpegFixtureDir", "GRAFT_JPEG_FIXTURE_DIR")
   private[graft] def mjpegFixtureDir: String =
-    sys.props.get("graft.gate.mjpegFixtureDir")
-      .orElse(sys.env.get("GRAFT_MJPEG_FIXTURE_DIR"))
-      .orElse(Option(getClass.getResource("/mjpeg_gate"))
-        .filter(_.getProtocol == "file")
-        .map(u => java.nio.file.Paths.get(u.toURI).toString))
-      .getOrElse("/root/repo/src/test/resources/mjpeg_gate")
-
-  /** Committed GIF gate fixture location — same resolution order as
-    * [[jpegFixtureDir]].
-    */
+    fixtureDir("mjpeg_gate", "graft.gate.mjpegFixtureDir", "GRAFT_MJPEG_FIXTURE_DIR")
   private[graft] def gifFixtureDir: String =
-    sys.props.get("graft.gate.gifFixtureDir")
-      .orElse(sys.env.get("GRAFT_GIF_FIXTURE_DIR"))
-      .orElse(Option(getClass.getResource("/gif_gate"))
-        .filter(_.getProtocol == "file")
-        .map(u => java.nio.file.Paths.get(u.toURI).toString))
-      .getOrElse("/root/repo/src/test/resources/gif_gate")
-
-  /** Committed BMP gate fixture location — same resolution order as
-    * [[jpegFixtureDir]].
-    */
+    fixtureDir("gif_gate", "graft.gate.gifFixtureDir", "GRAFT_GIF_FIXTURE_DIR")
   private[graft] def bmpFixtureDir: String =
-    sys.props.get("graft.gate.bmpFixtureDir")
-      .orElse(sys.env.get("GRAFT_BMP_FIXTURE_DIR"))
-      .orElse(Option(getClass.getResource("/bmp_gate"))
-        .filter(_.getProtocol == "file")
-        .map(u => java.nio.file.Paths.get(u.toURI).toString))
-      .getOrElse("/root/repo/src/test/resources/bmp_gate")
+    fixtureDir("bmp_gate", "graft.gate.bmpFixtureDir", "GRAFT_BMP_FIXTURE_DIR")
+
+  /** The fixture-decoded codec gates: read `payloads.parquet` under
+    * `dir`, decode every payload in a narrow mapPartitions (bounded
+    * per-record work, no shuffle, payloads pruned to the scan; a payload
+    * that fails to decode fails the gate, naming its media id), name the
+    * gate's columns and order by media_id. The mapPartitions lambda must
+    * stay in MLQueries and each gate must pass its own tuple type: the
+    * plan strings render the lambda's owner class and the tuple
+    * serializer, so moving either moves the gates' fingerprints.
+    */
+  private def decodedFixture[T <: Product : scala.reflect.runtime.universe.TypeTag](
+      s: SparkSession, dir: String, format: String, columns: String*)(
+      decode: (Long, Array[Byte]) => Option[T]): DataFrame = {
+    import s.implicits._
+    s.read.parquet(s"$dir/payloads.parquet")
+      .select(col("media_id"), col("payload"))
+      .as[(Long, Array[Byte])]
+      .mapPartitions { it =>
+        it.map { case (id, bytes) =>
+          decode(id, bytes).getOrElse(throw new IllegalStateException(
+            s"committed $format for media $id failed to decode"))
+        }
+      }
+      .toDF(columns: _*)
+      .orderBy(col("media_id"))
+  }
 
   /** Scene-cut threshold in micro-units of mean per-pixel channel shift —
     * the `multimodal_scene_cut` judged constant (see the gate's comment
@@ -3694,21 +3686,10 @@ $blockSql
     // decode, so gate + spec together prove byte-stable real decoding).
     NamedQuery(
       "multimodal_decode_jpeg",
-      (s, _) => {
-        import s.implicits._
-        s.read.parquet(s"$jpegFixtureDir/payloads.parquet")
-          .select(col("media_id"), col("payload"))
-          .as[(Long, Array[Byte])]
-          .mapPartitions { it =>
-            it.map { case (id, bytes) =>
-              val j = Multimodal.decodeJpeg(bytes)
-                .getOrElse(throw new IllegalStateException(
-                  s"committed JPEG for media $id failed to decode"))
-              (id, bytes.length.toLong, j.width, j.height, j.rSum, j.gSum, j.bSum)
-            }
-          }
-          .toDF("media_id", "n_bytes", "width", "height", "r_sum", "g_sum", "b_sum")
-          .orderBy(col("media_id"))
+      (s, _) => decodedFixture(s, jpegFixtureDir, "JPEG",
+        "media_id", "n_bytes", "width", "height", "r_sum", "g_sum", "b_sum") {
+        (id, bytes) => Multimodal.decodeJpeg(bytes).map(j =>
+          (id, bytes.length.toLong, j.width, j.height, j.rSum, j.gSum, j.bSum))
       },
       Some(s"""SELECT media_id, n_bytes, width, height, r_sum, g_sum, b_sum
               |FROM read_parquet('$jpegFixtureDir/expected.parquet/*.parquet')
@@ -3731,23 +3712,11 @@ $blockSql
     // inside mapPartitions, no shuffle, payloads pruned to the scan.
     NamedQuery(
       "multimodal_decode_mjpeg",
-      (s, _) => {
-        import s.implicits._
-        s.read.parquet(s"$mjpegFixtureDir/payloads.parquet")
-          .select(col("media_id"), col("payload"))
-          .as[(Long, Array[Byte])]
-          .mapPartitions { it =>
-            it.map { case (id, bytes) =>
-              val v = Multimodal.decodeMjpegAvi(bytes)
-                .getOrElse(throw new IllegalStateException(
-                  s"committed AVI for media $id failed to decode"))
-              (id, bytes.length.toLong, v.width, v.height, v.nFrames,
-                v.durationMs, v.rSum, v.gSum, v.bSum)
-            }
-          }
-          .toDF("media_id", "n_bytes", "width", "height", "n_frames",
-            "duration_ms", "r_sum", "g_sum", "b_sum")
-          .orderBy(col("media_id"))
+      (s, _) => decodedFixture(s, mjpegFixtureDir, "AVI", "media_id", "n_bytes",
+        "width", "height", "n_frames", "duration_ms", "r_sum", "g_sum", "b_sum") {
+        (id, bytes) => Multimodal.decodeMjpegAvi(bytes).map(v =>
+          (id, bytes.length.toLong, v.width, v.height, v.nFrames,
+            v.durationMs, v.rSum, v.gSum, v.bSum))
       },
       Some(s"""SELECT media_id, n_bytes, width, height, n_frames,
               |  duration_ms, r_sum, g_sum, b_sum
@@ -3767,23 +3736,11 @@ $blockSql
     // in a narrow mapPartitions, no shuffle.
     NamedQuery(
       "multimodal_decode_gif",
-      (s, _) => {
-        import s.implicits._
-        s.read.parquet(s"$gifFixtureDir/payloads.parquet")
-          .select(col("media_id"), col("payload"))
-          .as[(Long, Array[Byte])]
-          .mapPartitions { it =>
-            it.map { case (id, bytes) =>
-              val g = Multimodal.decodeGif(bytes)
-                .getOrElse(throw new IllegalStateException(
-                  s"committed GIF for media $id failed to decode"))
-              (id, bytes.length.toLong, g.width, g.height, g.nFrames,
-                g.rSum, g.gSum, g.bSum)
-            }
-          }
-          .toDF("media_id", "n_bytes", "width", "height", "n_frames",
-            "r_sum", "g_sum", "b_sum")
-          .orderBy(col("media_id"))
+      (s, _) => decodedFixture(s, gifFixtureDir, "GIF", "media_id", "n_bytes",
+        "width", "height", "n_frames", "r_sum", "g_sum", "b_sum") {
+        (id, bytes) => Multimodal.decodeGif(bytes).map(g =>
+          (id, bytes.length.toLong, g.width, g.height, g.nFrames,
+            g.rSum, g.gSum, g.bSum))
       },
       Some(s"""SELECT media_id, n_bytes, width, height, n_frames,
               |  r_sum, g_sum, b_sum
@@ -3798,21 +3755,10 @@ $blockSql
     // host without native libraries.
     NamedQuery(
       "multimodal_decode_bmp",
-      (s, _) => {
-        import s.implicits._
-        s.read.parquet(s"$bmpFixtureDir/payloads.parquet")
-          .select(col("media_id"), col("payload"))
-          .as[(Long, Array[Byte])]
-          .mapPartitions { it =>
-            it.map { case (id, bytes) =>
-              val b = Multimodal.decodeBmp(bytes)
-                .getOrElse(throw new IllegalStateException(
-                  s"committed BMP for media $id failed to decode"))
-              (id, bytes.length.toLong, b.width, b.height, b.rSum, b.gSum, b.bSum)
-            }
-          }
-          .toDF("media_id", "n_bytes", "width", "height", "r_sum", "g_sum", "b_sum")
-          .orderBy(col("media_id"))
+      (s, _) => decodedFixture(s, bmpFixtureDir, "BMP",
+        "media_id", "n_bytes", "width", "height", "r_sum", "g_sum", "b_sum") {
+        (id, bytes) => Multimodal.decodeBmp(bytes).map(b =>
+          (id, bytes.length.toLong, b.width, b.height, b.rSum, b.gSum, b.bSum))
       },
       Some(s"""SELECT media_id, n_bytes, width, height, r_sum, g_sum, b_sum
               |FROM read_parquet('$bmpFixtureDir/expected.parquet/*.parquet')

@@ -83,25 +83,14 @@ object QueryDsl {
     * (SPARK-23207, on by default), so row-to-partition assignment is
     * reproducible under task retry; every judged aggregate downstream
     * is partitioning-independent (integer/decimal lattices — the oracle
-    * hash re-check after this change is the proof). Opt-out for A/B and
-    * embeddings that want the raw scan: `spark.graft.fanout=false` /
-    * `SPARK_GRAFT_FANOUT=0`.
+    * hash re-check after this change is the proof).
     */
-  def fanout(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    val off = df.isStreaming || fanoutOff(s)
-    if (off) df
+  def fanout(df: DataFrame): DataFrame =
+    if (df.isStreaming) df
     else {
-      val target = s.sparkContext.defaultParallelism
+      val target = df.sparkSession.sparkContext.defaultParallelism
       if (df.rdd.getNumPartitions * 2 > target) df else df.repartition(target)
     }
-  }
-
-  /** The [[fanout]] kill switches: `SPARK_GRAFT_FANOUT` / `spark.graft.fanout` = 0 or false. */
-  private def fanoutOff(s: SparkSession): Boolean = {
-    def off(v: String) = v == "0" || v.equalsIgnoreCase("false")
-    sys.env.get("SPARK_GRAFT_FANOUT").exists(off) || s.conf.getOption("spark.graft.fanout").exists(off)
-  }
 
   /** Streaming twin of [[fanout]] (r22): fans a bounded file-stream's
     * narrow map side out over the idle cores. A streaming scan of the
@@ -114,17 +103,30 @@ object QueryDsl {
     * [[fanout]]: at production split counts the guard fails and the plan
     * is untouched; the repartition is stateless, so watermarks, state
     * sharding and output semantics are unchanged (the oracle hash
-    * re-check is the proof). Shares the [[fanout]] kill switches.
+    * re-check is the proof).
     */
-  def fanoutStream(df: DataFrame, batchProbe: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    val off = !df.isStreaming || fanoutOff(s)
-    if (off) df
+  def fanoutStream(df: DataFrame, batchProbe: DataFrame): DataFrame =
+    if (!df.isStreaming) df
     else {
-      val target = s.sparkContext.defaultParallelism
+      val target = df.sparkSession.sparkContext.defaultParallelism
       if (batchProbe.rdd.getNumPartitions * 2 > target) df else df.repartition(target)
     }
-  }
+
+  /** A committed gate fixture's directory, `src/test/resources/<dir>`.
+    * Resolution order: system property `property` (testable in-JVM) →
+    * env var `env` → the fixture on the classpath (any checkout's test
+    * run finds its own copy under target/test-classes; only file: URLs
+    * qualify — parquet cannot be read out of a jar entry) → the checkout
+    * path under the working directory, which the out-of-JVM DuckDB
+    * oracle run of a main started at the repo root reads.
+    */
+  def fixtureDir(dir: String, property: String, env: String): String =
+    sys.props.get(property)
+      .orElse(sys.env.get(env))
+      .orElse(Option(getClass.getResource(s"/$dir"))
+        .filter(_.getProtocol == "file")
+        .map(u => java.nio.file.Paths.get(u.toURI).toString))
+      .getOrElse(java.nio.file.Paths.get("src/test/resources", dir).toAbsolutePath.toString)
 
   /** THE repo-wide boolean-knob parse, one definition (round 12 — it had
     * grown copies): "1"/"true" (any case) enable; anything else,

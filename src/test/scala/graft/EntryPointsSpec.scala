@@ -23,6 +23,16 @@ class EntryPointsSpec extends AnyFunSuite {
     assert(builders === Seq("src/main/scala/graft/Sessions.scala"))
   }
 
+  test("one ImageIO read loop and one fixture resolver in src/main") {
+    def uses(token: String): Map[String, Int] =
+      sources("src/main/scala").map { p =>
+        val n = Files.readString(p).split(java.util.regex.Pattern.quote(token), -1).length - 1
+        p.toString -> n
+      }.filter(_._2 > 0).toMap
+    assert(uses("getImageReaders") === Map("src/main/scala/graft/ml/Multimodal.scala" -> 1))
+    assert(uses(".getResource(") === Map("src/main/scala/graft/queries/NamedQuery.scala" -> 1))
+  }
+
   test("SPARK_GRAFT_CPUS must be a positive int, blank means unset") {
     assert(Sessions.positiveInt("SPARK_GRAFT_CPUS", Some(" 3 ")) === Some(3))
     assert(Sessions.positiveInt("SPARK_GRAFT_CPUS", Some("  ")) === None)

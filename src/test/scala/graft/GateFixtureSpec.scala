@@ -26,31 +26,59 @@ class GateFixtureSpec extends SparkSpec {
     assert(canon(committed) === canon(extracted))
   }
 
-  test("fixtureDir is overridable via system property") {
-    val prev = sys.props.get("graft.gate.fixtureDir")
-    try {
-      System.setProperty("graft.gate.fixtureDir", "/tmp/elsewhere_gate")
-      assert(AnalyzerGates.fixtureDir === "/tmp/elsewhere_gate")
-      // the oracle SQL is rebuilt per access and embeds the override
-      assert(AnalyzerGates.all.head.oracle.get.contains("/tmp/elsewhere_gate"))
-    } finally prev match {
-      case Some(v) => System.setProperty("graft.gate.fixtureDir", v)
-      case None => System.clearProperty("graft.gate.fixtureDir")
+  /** Every committed-fixture accessor: (resource dir, property, env var, resolve). */
+  private val resolvers: Seq[(String, String, String, () => String)] = {
+    import graft.queries.{CurationQueries, IngestQueries, MLQueries}
+    Seq(
+      ("workload_gate_parquet", "graft.gate.fixtureDir", "GRAFT_GATE_FIXTURE_DIR",
+        () => AnalyzerGates.fixtureDir),
+      ("bpe32k_gate", "graft.gate.bpe32kFixtureDir", "GRAFT_BPE32K_FIXTURE_DIR",
+        () => CurationQueries.bpe32kFixtureDir),
+      ("ingest_census_gate", "graft.gate.ingestCensusFixtureDir",
+        "GRAFT_INGEST_CENSUS_FIXTURE_DIR", () => IngestQueries.censusFixtureDir),
+      ("jpeg_gate", "graft.gate.jpegFixtureDir", "GRAFT_JPEG_FIXTURE_DIR",
+        () => MLQueries.jpegFixtureDir),
+      ("mjpeg_gate", "graft.gate.mjpegFixtureDir", "GRAFT_MJPEG_FIXTURE_DIR",
+        () => MLQueries.mjpegFixtureDir),
+      ("gif_gate", "graft.gate.gifFixtureDir", "GRAFT_GIF_FIXTURE_DIR",
+        () => MLQueries.gifFixtureDir),
+      ("bmp_gate", "graft.gate.bmpFixtureDir", "GRAFT_BMP_FIXTURE_DIR",
+        () => MLQueries.bmpFixtureDir))
+  }
+
+  private def withProperty[A](prop: String, value: String)(body: => A): A = {
+    val prev = sys.props.get(prop)
+    System.setProperty(prop, value)
+    try body
+    finally prev match {
+      case Some(v) => System.setProperty(prop, v)
+      case None => System.clearProperty(prop)
     }
-    assert(AnalyzerGates.fixtureDir.endsWith("workload_gate_parquet"))
+  }
+
+  test("fixtureDir is overridable via system property") {
+    for ((dir, prop, _, resolve) <- resolvers) {
+      withProperty(prop, s"/tmp/elsewhere_$dir")(
+        assert(resolve() === s"/tmp/elsewhere_$dir", prop))
+      assert(resolve().endsWith(dir), prop)
+    }
+    // the oracle SQL is rebuilt per access and embeds the override
+    withProperty("graft.gate.fixtureDir", "/tmp/elsewhere_gate")(
+      assert(AnalyzerGates.all.head.oracle.get.contains("/tmp/elsewhere_gate")))
   }
 
   test("without overrides the fixture resolves via the classpath first") {
-    // neither the property nor (in sbt test) the env var is set here, so
-    // the resolved dir must be THIS checkout's classpath copy (a real
-    // directory), not the absolute /root/repo fallback — i.e. the gates
-    // run unchanged from any checkout location
-    assume(sys.env.get("GRAFT_GATE_FIXTURE_DIR").isEmpty)
-    val dir = AnalyzerGates.fixtureDir
-    assert(dir === java.nio.file.Paths.get(
-      getClass.getResource("/workload_gate_parquet").toURI).toString)
-    assert(new java.io.File(dir).isDirectory)
-    assert(new java.io.File(dir).listFiles().exists(_.getName.endsWith(".parquet")))
+    // neither the properties nor (in sbt test) the env vars are set here,
+    // so each resolved dir must be THIS checkout's classpath copy (a real
+    // directory), not the working-directory fallback — i.e. the gates run
+    // unchanged from any checkout location
+    for ((dir, _, env, resolve) <- resolvers) {
+      assume(sys.env.get(env).isEmpty, env)
+      assert(resolve() === java.nio.file.Paths.get(
+        getClass.getResource(s"/$dir").toURI).toString)
+      val files = new java.io.File(resolve()).listFiles()
+      assert(files != null && files.exists(_.getName.endsWith(".parquet")), dir)
+    }
   }
 
   test("operator_wall over the fixture hits the designed exact pie") {

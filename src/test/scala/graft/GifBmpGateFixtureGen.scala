@@ -60,7 +60,7 @@ object GifBmpGateFixtureGen {
     (sr, sg, sb)
   }
 
-  private def indexedFrame(id: Long, f: Int): java.awt.image.BufferedImage = {
+  def indexedFrame(id: Long, f: Int): java.awt.image.BufferedImage = {
     val (w, h) = geometry(id)
     val pal = palette(id)
     val icm = new java.awt.image.IndexColorModel(8, 64,
@@ -73,17 +73,19 @@ object GifBmpGateFixtureGen {
     img
   }
 
-  def encodeGif(id: Long): Array[Byte] = {
-    val frames = nFrames(id)
+  def encodeGif(id: Long): Array[Byte] =
+    writeGif((0 until nFrames(id)).map(indexedFrame(id, _)))
+
+  /** An animated GIF holding `frames` in order, each at its own size. */
+  def writeGif(frames: Seq[java.awt.image.BufferedImage]): Array[Byte] = {
     val baos = new java.io.ByteArrayOutputStream()
     val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
     val ios = javax.imageio.ImageIO.createImageOutputStream(baos)
     try {
       writer.setOutput(ios)
       writer.prepareWriteSequence(null)
-      for (f <- 0 until frames)
-        writer.writeToSequence(
-          new javax.imageio.IIOImage(indexedFrame(id, f), null, null), null)
+      for (img <- frames)
+        writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
       writer.endWriteSequence()
     } finally { writer.dispose(); ios.close() }
     baos.toByteArray

@@ -92,6 +92,77 @@ class GifBmpGateSpec extends SparkSpec {
     for (len <- 0 until bmpGood.length by 11) Multimodal.decodeBmp(bmpGood.take(len))
   }
 
+  /** `(width, height)` of every frame as ImageIO's header read declares it. */
+  private def declared(format: String, b: Array[Byte]): Seq[(Int, Int)] = {
+    val r = javax.imageio.ImageIO.getImageReadersByFormatName(format).next()
+    try {
+      r.setInput(javax.imageio.ImageIO.createImageInputStream(new java.io.ByteArrayInputStream(b)))
+      (0 until r.getNumImages(true)).map(i => (r.getWidth(i), r.getHeight(i)))
+    } finally r.dispose()
+  }
+
+  private def put16LE(b: Array[Byte], off: Int, v: Int): Unit = {
+    b(off) = v.toByte; b(off + 1) = (v >> 8).toByte
+  }
+
+  /** `gif` with its logical screen and every frame's image descriptor
+    * patched to declare `w`×`h`; the pixel data is left as it was.
+    */
+  private def gifDeclaring(gif: Array[Byte], w: Int, h: Int): Array[Byte] = {
+    val b = gif.clone()
+    def table(packed: Int): Int = if ((packed & 0x80) != 0) 3 << ((packed & 7) + 1) else 0
+    def subBlocks(start: Int): Int = {
+      var off = start
+      while (b(off) != 0) off += (b(off) & 0xff) + 1
+      off + 1
+    }
+    put16LE(b, 6, w); put16LE(b, 8, h)
+    var off = 13 + table(b(10) & 0xff)
+    while (b(off) != 0x3b) { // trailer
+      if (b(off) == 0x21) off = subBlocks(off + 2) // extension: label, sub-blocks
+      else { // image descriptor: left, top, width, height, packed; LZW code size
+        put16LE(b, off + 5, w); put16LE(b, off + 7, h)
+        off = subBlocks(off + 10 + table(b(off + 9) & 0xff) + 1)
+      }
+    }
+    b
+  }
+
+  test("decodeGif: a later frame whose size differs from frame 0's gives None") {
+    def frame(w: Int, h: Int) = GifBmpGateFixtureGen.indexedFrame(1L, 0)
+      .getSubimage(0, 0, w, h)
+    val same = GifBmpGateFixtureGen.writeGif(Seq(frame(6, 5), frame(6, 5)))
+    assert(Multimodal.decodeGif(same).map(_.nFrames) === Some(2L))
+    for ((w, h) <- Seq((8, 7), (4, 3), (6, 4))) {
+      val gif = GifBmpGateFixtureGen.writeGif(Seq(frame(6, 5), frame(w, h)))
+      assert(declared("gif", gif) === Seq((6, 5), (w, h)))
+      assert(Multimodal.decodeGif(gif).isEmpty, s"frame 1 at $w x $h")
+    }
+  }
+
+  test("decodeGif/decodeBmp: header geometry past 2^26 pixels gives None") {
+    val cap = 1L << 26
+    val bmp = GifBmpGateFixtureGen.encodeBmp(1L).clone()
+    // the file-size field grows too, or ImageIO itself refuses the header
+    java.nio.ByteBuffer.wrap(bmp).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(2, 54 + 3 * 8193 * 8193).putInt(18, 8193).putInt(22, 8193)
+    assert(8193L * 8193 > cap)
+    assert(declared("bmp", bmp) === Seq((8193, 8193)))
+    assert(Multimodal.decodeBmp(bmp).isEmpty)
+    val gif = gifDeclaring(GifBmpGateFixtureGen.encodeGif(1L), 8193, 8193)
+    assert(declared("gif", gif) === Seq.fill(GifBmpGateFixtureGen.nFrames(1L))((8193, 8193)))
+    assert(Multimodal.decodeGif(gif).isEmpty)
+  }
+
+  test("decodeGif: frames x pixels past 2^26 gives None though each frame fits") {
+    val cap = 1L << 26
+    val n = GifBmpGateFixtureGen.nFrames(3L)
+    assert(n === 5 && 4096L * 4096 <= cap && n * 4096L * 4096 > cap)
+    val gif = gifDeclaring(GifBmpGateFixtureGen.encodeGif(3L), 4096, 4096)
+    assert(declared("gif", gif) === Seq.fill(n)((4096, 4096)))
+    assert(Multimodal.decodeGif(gif).isEmpty)
+  }
+
   test("featurize dispatch routes GIF and BMP payloads through the real decoders") {
     import spark.implicits._
     val (gid, gifBytes) = payloads(MLQueries.gifFixtureDir).head
