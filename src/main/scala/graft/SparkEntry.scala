@@ -5,7 +5,17 @@ import org.apache.spark.sql.functions._
 import graft.queries.{AnalyzerGates, CoreQueries, CurationQueries, IngestQueries, MLQueries, NamedQuery, SketchQueries}
 import graft.tables.Tables
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** The entry-point contract of the judged surfaces, read by [[Verify]] and
+  * [[Bench]]:
+  *  - `entry`: one flagship query over the sf0.001 tables, smoke-checked
+  *    for a non-empty result;
+  *  - `queries`: every judged gate, name → `(session, sfDir) => DataFrame`;
+  *  - `select`: the gate names a comma list picks (none named → all), an
+  *    unknown name refused before any Spark work;
+  *  - `oracleSql`: for each gate that has one, DuckDB SQL over the same
+  *    parquet tables whose result must hash equal to the gate's
+  *    (`tools/compare.py`).
+  */
 object SparkEntry {
 
   /** Registry of all judged queries; families contribute NamedQuery seqs. */

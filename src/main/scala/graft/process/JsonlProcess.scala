@@ -1,7 +1,10 @@
 package graft.process
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import com.fasterxml.jackson.core.io.JsonStringEncoder
 
 /** Stage 2.5 (reference `jsonl_process.py`): schema filtering + name
@@ -10,9 +13,22 @@ import com.fasterxml.jackson.core.io.JsonStringEncoder
   * The reference walks raw nested JSON per line (`nested_lookup`); on the
   * normalized schema each key lives in a known column, so filtering is a
   * plain predicate and obfuscation a map lookup in a narrow projection.
-  * Each dictionary (the reference's "translation table",
-  * `jsonl_process.py:186-194`) is built by one distributed aggregation
+  * The dictionaries (the reference's "translation table",
+  * `jsonl_process.py:186-194`) are built by a distributed aggregation
   * over the distinct names and collected, bounded, to the driver.
+  *
+  * Composition contract: the per-flag renames [[renameUsers]],
+  * [[renameSchemas]] and [[renameCatalogs]] compose. The first of them on
+  * a frame collects every user, schema and catalog dictionary the frame's
+  * columns carry in one job; applying another to the frame it returned
+  * reuses those dictionaries and rebuilds the result from the original
+  * frame in one projection, so a chain of the three costs one dictionary
+  * job and one rewrite of `inputs` and `plan_nodes`. The result equals
+  * the one-by-one chain. Any other frame starts fresh: one that was
+  * filtered, re-selected or otherwise derived, one that went through
+  * [[removeLocations]], [[removeQuery]], hash-token mode or
+  * [[obfuscateArrayColumn]] (these stack on top, uncomposed), and one
+  * that already carries the rename asked for.
   *
   * First-seen-order encoding (`NameObfuscator`, `jsonl_process.py:53-76`)
   * is order-dependent in the reference (file iteration order); here it is
@@ -81,17 +97,20 @@ object JsonlProcess {
   // ---- token assignment modes -----------------------------------------
   //
   // Default tokens are the reference contract: `prefix0, prefix1, …` in
-  // first-seen order (`NameObfuscator`, `jsonl_process.py:53-61`). Every
-  // sequential dictionary — users, arrays, schemas, catalogs — goes
-  // through [[firstSeenDict]]: one bounded collect of the distinct names,
-  // numbered on the driver, then applied as a map-literal lookup in a
-  // narrow projection. The opt-in HASH mode (`--hash-tokens`) trades the
-  // sequential numbering for `prefix` + 16-hex md5 prefix of the name —
-  // for users and arrays a pure narrow map with no dictionary at all — for
-  // corpora whose name cardinality is too large to hold on the driver
-  // (64-bit tokens: collision odds ~n²/2^65, ~3e-7 at 100 M distinct
-  // names). Same injectivity and '' guard; tokens are stable across
-  // runs/partitionings by construction.
+  // first-seen order (`NameObfuscator`, `jsonl_process.py:53-61`). A
+  // sequential dictionary is a bounded collect of the distinct names sorted
+  // by (first_seen, old_name) in Spark, numbered on the driver and applied
+  // as a hashed map-literal lookup ([[lookup]]) in a narrow projection. The
+  // user, schema and catalog dictionaries of one frame share a single
+  // collect, the census (see "composition" below); the array dictionary
+  // and every per-kind fallback go through [[firstSeenDict]] alone. The
+  // opt-in HASH mode (`--hash-tokens`) trades the sequential numbering for
+  // `prefix` + 16-hex md5 prefix of the name — for users and arrays a pure
+  // narrow map with no dictionary at all — for corpora whose name
+  // cardinality is too large to hold on the driver (64-bit tokens:
+  // collision odds ~n²/2^65, ~3e-7 at 100 M distinct names). Same
+  // injectivity and '' guard; tokens are stable across runs/partitionings
+  // by construction.
 
   /** The hash-mode token for one name column ('' passes through, like
     * `NameObfuscator.__call__`'s guard).
@@ -99,6 +118,10 @@ object JsonlProcess {
   private def hashToken(c: Column, prefix: String): Column =
     when(c.isNull || c === "", c)
       .otherwise(concat(lit(prefix), substring(md5(c), 1, 16)))
+
+  /** `prefix0, prefix1, …` over `names` in the order given. */
+  private def numbered(names: Seq[String], prefix: String): Map[String, String] =
+    names.zipWithIndex.map { case (n, i) => n -> s"$prefix$i" }.toMap
 
   /** The one sequential dictionary: `(old_name, first_seen)` rows, one per
     * distinct name → `prefix0, prefix1, …` in `(first_seen, old_name)`
@@ -112,23 +135,52 @@ object JsonlProcess {
     */
   private def firstSeenDict(names: DataFrame, prefix: String,
       what: String): Map[String, String] =
-    collectBounded(names.orderBy(col("first_seen"), col("old_name")),
-        maxDictNames(names.sparkSession), what)
-      .zipWithIndex
-      .map { case (r, i) => r.getString(0) -> s"$prefix$i" }
-      .toMap
+    numbered(collectBounded(names.orderBy(col("first_seen"), col("old_name")),
+        maxDictNames(names.sparkSession), what).map(_.getString(0)).toSeq, prefix)
+
+  /** Names per hash bucket of a bucketed [[probe]]. */
+  private val BucketNames = 64
+
+  /** `c` looked up in `dict`: the value, or null on a miss ('' and null
+    * included). try_element_at, not element_at: under ANSI (Spark 4
+    * default) a miss on a map THROWS, and misses are normal here. Spark
+    * looks a map literal up by a scan of its keys, so a dictionary past
+    * [[BucketNames]] names is split into buckets of at most that many,
+    * one small map literal each inside one array literal, and the bucket
+    * is picked by `pmod(xxhash64(name), nBuckets)` (the driver hashes
+    * with the same function and seed): the per-row cost stays flat in the
+    * dictionary size. A one-bucket dictionary stays a single map literal
+    * with no hash call.
+    */
+  private def probe[V: TypeTag](dict: Map[String, V]): Column => Column =
+    if (dict.size <= BucketNames) {
+      val m = typedLit(dict)
+      c => try_element_at(m, c)
+    } else {
+      def bucket(name: String, n: Int): Int = Math.floorMod(
+        XXH64.hashUTF8String(UTF8String.fromString(name), 42L), n.toLong).toInt
+      // twice the bucket count the dictionary needs on average, doubled
+      // again until no bucket holds more than BucketNames
+      val (n, buckets) = Iterator.iterate(2 * ((dict.size - 1) / BucketNames + 1))(_ * 2)
+        .map(n => n -> dict.groupBy { case (k, _) => bucket(k, n) })
+        .find(_._2.valuesIterator.forall(_.size <= BucketNames)).get
+      val arr = typedLit((0 until n).map(b => buckets.getOrElse(b, Map.empty[String, V])))
+      c => try_element_at(element_at(arr, (pmod(xxhash64(c), lit(n.toLong)) + 1).cast("int")), c)
+    }
 
   /** `c` through `dict`; names outside it — '' and null included — pass
-    * through. try_element_at, not element_at: under ANSI (Spark 4
-    * default) a miss on a map THROWS, and misses are normal here. The
-    * lookup scans the map literal's keys, so its per-row cost grows with
-    * the dictionary: past some thousands of names `--hash-tokens` is the
-    * cheaper mode.
+    * through.
     */
-  private def lookup(dict: Map[String, String]): Column => Column = {
-    val m = typedLit(dict)
-    c => coalesce(try_element_at(m, c), c)
+  private[graft] def lookup(dict: Map[String, String]): Column => Column = {
+    val hit = probe(dict)
+    c => coalesce(hit(c), c)
   }
+
+  /** `(old_name, first_seen)` of the non-empty values of `column`. */
+  private def columnNames(df: DataFrame, column: String): DataFrame =
+    df.filter(col(column).isNotNull && col(column) =!= "")
+      .groupBy(col(column).as("old_name"))
+      .agg(min(col("query_id")).as("first_seen"))
 
   /** A14/A15: replace `column` values by their first-seen (min query_id)
     * tokens ('' passes through unchanged, matching
@@ -138,13 +190,9 @@ object JsonlProcess {
       hashTokens: Boolean = false): DataFrame =
     if (hashTokens)
       df.withColumn(column, hashToken(col(column), prefix))
-    else {
-      val names = df.filter(col(column).isNotNull && col(column) =!= "")
-        .groupBy(col(column).as("old_name"))
-        .agg(min(col("query_id")).as("first_seen"))
-      df.withColumn(column,
-        lookup(firstSeenDict(names, prefix, s"$prefix dictionary"))(col(column)))
-    }
+    else
+      df.withColumn(column, lookup(firstSeenDict(columnNames(df, column), prefix,
+        s"$prefix dictionary"))(col(column)))
 
   /** `ListObfuscator` (`jsonl_process.py:68-76`): obfuscate every element
     * of an array<string> column through ONE shared dictionary (the
@@ -187,10 +235,6 @@ object JsonlProcess {
   // documents BEFORE extract — the 2-part ambiguity only exists after
   // the flatten.
 
-  private def seg(c: Column, i: Int): Column = split(c, "\\.")(i)
-  private def isThreePart(c: Column): Column =
-    c.isNotNull && size(split(c, "\\.")) === 3
-
   /** Hard bound on the distinct-name cardinality a collected obfuscation
     * dictionary may reach (round 12): every obfuscation dictionary — users,
     * arrays, schemas, catalogs — is collected to the driver and
@@ -225,9 +269,17 @@ object JsonlProcess {
     v
   }
 
-  /** Collect at most `bound` dictionary rows — one extra row is fetched
-    * as the overflow sentinel, so the guard costs no second aggregation
-    * pass and never materializes an unbounded result on the driver.
+  /** At most `bound` rows of `names`, or None when it has more — one extra
+    * row is fetched as the overflow sentinel, so the check costs no second
+    * aggregation pass and never materializes an unbounded result on the
+    * driver.
+    */
+  private def collectWithin(names: DataFrame, bound: Long): Option[Array[Row]] = {
+    val rows = names.limit(bound.toInt + 1).collect()
+    if (rows.length <= bound) Some(rows) else None
+  }
+
+  /** Collect at most `bound` dictionary rows, failing loud past it.
     * Shared with [[RawProcess.buildDictionaries]] (round 13): ONE
     * definition guards every dictionary collect in the repo, so neither
     * obfuscation path can regress to an unbounded driver materialization.
@@ -237,99 +289,180 @@ object JsonlProcess {
   private[process] def collectBounded(names: DataFrame, bound: Long,
       what: String,
       escape: String = "Use --hash-tokens (pure-function tokens, no total-order sort)")
-      : Array[org.apache.spark.sql.Row] = {
-    val rows = names.limit(bound.toInt + 1).collect()
-    require(rows.length <= bound,
+      : Array[Row] = {
+    val rows = collectWithin(names, bound)
+    require(rows.isDefined,
       s"$what: more than $bound distinct names — this dictionary is no " +
         "longer catalog-metadata-sized and would exhaust driver memory. " +
         s"$escape, " +
         "raise spark.graft.maxDictNames deliberately, or pre-filter the corpus.")
-    rows
+    rows.get
   }
 
-  /** Shared dictionary over both carriers of one name kind: `fromInput`
-    * extracts the name from a raw inputs JSON element; `segIdx` is its
-    * segment position in a 3-part table name. The summaries are scanned
-    * once per dictionary (plan nodes contribute both name fields through
-    * one explode).
+  /** One sequential rename kind: its token prefix (also its census tag and
+    * its column in [[segmentNames]]), the `inputs` JSON key and the
+    * segment of a 3-part table name it renames (users have neither).
     */
-  private def sharedDict(df: DataFrame, fromInput: Column => Column,
-      segIdx: Int, prefix: String, hashTokens: Boolean = false): Map[String, String] = {
-    val fromInputs = df.select(col("query_id"), explode(col("inputs")).as("inp"))
-      .select(col("query_id"), fromInput(col("inp")).as("old_name"))
-    val nodeNames = df.select(col("query_id"), explode(col("plan_nodes")).as("n"))
+  private final case class Kind(prefix: String, key: String, segIdx: Int)
+  private val Users = Kind("user", "", -1)
+  private val Schemas = Kind("schema", "schema", 1)
+  private val Catalogs = Kind("catalog", "connectorId", 0)
+
+  /** `(query_id, schema, catalog)` per occurrence in either carrier: the
+    * `$.schema`/`$.connectorId` of every raw inputs element, and segments
+    * 1/0 of every 3-part table_name/deepest_table. Each array is exploded
+    * once and each name split once for both kinds.
+    */
+  private def segmentNames(df: DataFrame): DataFrame = {
+    val fromInputs = df.select(col("query_id"), explode(col("inputs")).as("i"))
+      .select(col("query_id"),
+        get_json_object(col("i"), "$.schema").as("schema"),
+        get_json_object(col("i"), "$.connectorId").as("catalog"))
+    val fromNodes = df.select(col("query_id"), explode(col("plan_nodes")).as("n"))
       .select(col("query_id"),
         explode(array(col("n.table_name"), col("n.deepest_table"))).as("tn"))
-      .filter(isThreePart(col("tn")))
-      .select(col("query_id"), seg(col("tn"), segIdx).as("old_name"))
-    val names = fromInputs.unionAll(nodeNames)
+      .select(col("query_id"), split(col("tn"), "\\.").as("p"))
+      .filter(col("p").isNotNull && size(col("p")) === 3)
+      .select(col("query_id"), col("p")(1).as("schema"), col("p")(0).as("catalog"))
+    fromInputs.unionAll(fromNodes)
+  }
+
+  /** The schema or catalog dictionary on its own (the per-kind path):
+    * `(old_name, first_seen)` over both carriers, one bounded collect.
+    */
+  private def sharedDict(df: DataFrame, kind: Kind,
+      hashTokens: Boolean = false): Map[String, String] = {
+    val names = segmentNames(df).select(col("query_id"), col(kind.prefix).as("old_name"))
       .filter(col("old_name").isNotNull && col("old_name") =!= "")
       .groupBy(col("old_name")).agg(min(col("query_id")).as("first_seen"))
     // hash mode: tokens are a pure function of the name — SAME derivation
     // (engine md5, 16 hex chars) as hashToken above, computed in the same
     // aggregation job; no first-seen ordering anywhere. The dictionary is
-    // still collected (applyDict rewrites both nested carriers from a map
+    // still collected (the rewrite applies both nested carriers from a map
     // literal), so hash mode removes the total-order sort but keeps the
     // catalog-metadata-sized driver map.
     if (hashTokens)
-      collectBounded(names.select(col("old_name"),
-          concat(lit(prefix), substring(md5(col("old_name")), 1, 16)).as("tok")),
-          maxDictNames(df.sparkSession), s"$prefix dictionary (hash mode)")
+      collectBounded(names.select(col("old_name"), hashToken(col("old_name"), kind.prefix)),
+          maxDictNames(df.sparkSession), s"${kind.prefix} dictionary (hash mode)")
         .map(r => r.getString(0) -> r.getString(1))
         .toMap
-    else firstSeenDict(names, prefix, s"$prefix dictionary")
+    else firstSeenDict(names, kind.prefix, s"${kind.prefix} dictionary")
   }
 
-  /** Rename schema/catalog occurrences through one shared dictionary:
-    * the `key` field of raw inputs JSON (literal replace on the escaped
-    * compact form — unknown fields survive untouched) and segment
-    * `segIdx` of every 3-part table_name/deepest_table in plan_nodes
-    * (struct rebuilt field by field — Spark has no nested-field update
-    * inside an array). Both rewrites are in-place `transform`s: row
-    * identity and array order are preserved by construction. The map
-    * literal carries (token, escaped-old) per name, so each inputs
-    * element pays ONE JSON extraction and one map probe.
+  /** The per-kind dictionary of a sequential rename. */
+  private def kindDict(df: DataFrame, kind: Kind): Map[String, String] =
+    if (kind == Users) firstSeenDict(columnNames(df, "user"), "user", "user dictionary")
+    else sharedDict(df, kind)
+
+  /** Every sequential dictionary whose carriers `df` has, from one tagged
+    * aggregation and one collect of at most (kinds × maxDictNames) rows,
+    * sorted by (kind, first_seen, old_name) in Spark. A kind over its
+    * bound is left out, and so is every kind when the collect is
+    * truncated: the caller then takes the per-kind path, which raises the
+    * guard error only if that kind is asked for.
     */
-  private def applyDict(df: DataFrame, dict: Map[String, String],
-      key: String, segIdx: Int): DataFrame = {
-    if (dict.isEmpty) return df
-    // ONE map literal: old name -> (token, jackson-escaped old name).
-    // try_element_at, not element_at: under ANSI (Spark 4 default) a miss
-    // on a map THROWS — and misses are normal here ('' never enters the
-    // dictionary, mirroring NameObfuscator's guard; names outside the
-    // dict pass through).
+  private def census(df: DataFrame): Map[Kind, Map[String, String]] = {
+    val has = df.columns.toSet
+    val users = if (has("user")) Seq(Users) else Nil
+    val segments = if (has("inputs") && has("plan_nodes")) Seq(Schemas, Catalogs) else Nil
+    val kinds = users ++ segments
+    if (!has("query_id") || kinds.isEmpty) return Map.empty
+    val tagged = (
+      users.map(k => df.select(col("query_id"), lit(k.prefix).as("kind"), col("user").as("old_name"))) ++
+      (if (segments.isEmpty) Nil
+       else Seq(segmentNames(df).unpivot(Array(col("query_id")),
+         segments.map(k => col(k.prefix)).toArray, "kind", "old_name")))
+    ).reduce(_ unionAll _)
+    val names = tagged.filter(col("old_name").isNotNull && col("old_name") =!= "")
+      .groupBy(col("kind"), col("old_name")).agg(min(col("query_id")).as("first_seen"))
+      .orderBy(col("kind"), col("first_seen"), col("old_name"))
+    val max = maxDictNames(df.sparkSession)
+    collectWithin(names, math.min(kinds.size * max, Int.MaxValue - 1L)).fold(
+      Map.empty[Kind, Map[String, String]]) { rows =>
+      val byKind = rows.groupBy(_.getString(0))
+      kinds.flatMap { k =>
+        val ks = byKind.getOrElse(k.prefix, Array.empty[Row])
+        if (ks.length > max) None else Some(k -> numbered(ks.map(_.getString(1)).toSeq, k.prefix))
+      }.toMap
+    }
+  }
+
+  /** Every rename of `dicts` (at most one per kind, in call order) over
+    * `df` in one projection: the user lookup, one `inputs` transform and
+    * one `plan_nodes` transform that apply every segment dictionary. In
+    * `inputs`, the `key` field of each raw JSON element is replaced
+    * literally on the escaped compact form, so unknown fields survive
+    * untouched; in `plan_nodes`, segment `segIdx` of every 3-part
+    * table_name/deepest_table is renamed through `withField`, so every
+    * other field keeps its value, type and place. Both rewrites are
+    * in-place `transform`s: row identity and array order are preserved by
+    * construction. A segment dictionary carries (token, escaped old) per
+    * name, so each inputs element pays one JSON extraction and one probe
+    * per kind.
+    */
+  private def rewrite(df: DataFrame, dicts: Seq[(Kind, Map[String, String])]): DataFrame = {
+    val live = dicts.filter(_._2.nonEmpty)
+    val users = live.collectFirst { case (Users, d) => "user" -> lookup(d)(col("user")) }
     // The raw element is Jackson's `JsonNode.toString`, which stores a
     // name `get_json_object` reports as `we"b` as `we\"b`: the replace
     // searches for the form Jackson's own escaper makes.
-    val withEsc = typedLit(dict.map { case (o, n) =>
-      o -> (n, String.valueOf(JsonStringEncoder.getInstance().quoteAsString(o))) })
-    def renamed(c: Column): Column = try_element_at(withEsc, c).getField("_1")
-    def putSeg(c: Column): Column = {
-      val repl = renamed(seg(c, segIdx))
-      when(isThreePart(c) && repl.isNotNull,
-        concat_ws(".", (0 until 3).map(i => if (i == segIdx) repl else seg(c, i)): _*))
-        .otherwise(c)
+    val segs = live.filter(_._1 != Users).map { case (k, d) =>
+      k -> probe(d.map { case (o, n) =>
+        o -> (n, String.valueOf(JsonStringEncoder.getInstance().quoteAsString(o))) })
     }
-    df.withColumn("inputs", transform(col("inputs"), { inp =>
-      val hit = try_element_at(withEsc, get_json_object(inp, s"$$.$key"))
-      when(hit.isNull, inp).otherwise(
-        replace(inp, concat(lit(s""""$key":""""), hit.getField("_2"), lit("\"")),
-          concat(lit(s""""$key":""""), hit.getField("_1"), lit("\""))))
-    }))
-      .withColumn("plan_nodes", transform(col("plan_nodes"), n => struct(
-        n.getField("fragment_id").as("fragment_id"),
-        n.getField("fragment_idx").as("fragment_idx"),
-        n.getField("node_id").as("node_id"),
-        n.getField("node_type").as("node_type"),
-        n.getField("parent_id").as("parent_id"),
-        n.getField("depth").as("depth"),
-        n.getField("dfs_order").as("dfs_order"),
-        n.getField("subtree_end").as("subtree_end"),
-        putSeg(n.getField("table_name")).as("table_name"),
-        putSeg(n.getField("deepest_table")).as("deepest_table"),
-        n.getField("join_type").as("join_type"),
-        n.getField("join_distribution").as("join_distribution"),
-        n.getField("has_criteria").as("has_criteria"))))
+    def putSegs(c: Column): Column = {
+      val p = split(c, "\\.")
+      val parts = (0 until 3).map(i => segs.find(_._1.segIdx == i)
+        .fold(p(i))(s => coalesce(s._2(p(i)).getField("_1"), p(i))))
+      when(c.isNotNull && size(p) === 3, concat_ws(".", parts: _*)).otherwise(c)
+    }
+    val carriers = if (segs.isEmpty) Nil else Seq(
+      "inputs" -> transform(col("inputs"), inp =>
+        segs.foldLeft(inp) { case (acc, (k, hitOf)) =>
+          val hit = hitOf(get_json_object(inp, s"$$.${k.key}"))
+          val pair = s""""${k.key}":""""
+          when(hit.isNull, acc).otherwise(
+            replace(acc, concat(lit(pair), hit.getField("_2"), lit("\"")),
+              concat(lit(pair), hit.getField("_1"), lit("\""))))
+        }),
+      "plan_nodes" -> transform(col("plan_nodes"), n => n
+        .withField("table_name", putSegs(n.getField("table_name")))
+        .withField("deepest_table", putSegs(n.getField("deepest_table")))))
+    val columns = users.toSeq ++ carriers
+    if (columns.isEmpty) df else df.withColumns(columns.toMap)
+  }
+
+
+  // ---- composition of the sequential renames -------------------------
+  //
+  // The reference makes one sequential pass per line through shared
+  // obfuscator instances (`jsonl_process.py:89-194`). Here the frame a
+  // sequential rename returns is remembered — weakly, by identity — with
+  // its pending state: the source frame, its [[census]] and the renames
+  // asked for so far; a rename of exactly that frame rebuilds from the
+  // source in one [[rewrite]] (the contract is in the object's scaladoc).
+  // The fusion is sound because the renames are independent: tokens
+  // contain no '.', so a 3-part name stays 3-part, and the `inputs`
+  // rewrite replaces only the `"key":"…"` pair, so every dictionary reads
+  // the same names from the source as from an earlier rename's output.
+
+  private final case class Pending(source: DataFrame,
+      census: Map[Kind, Map[String, String]],
+      renames: Vector[(Kind, Map[String, String])])
+
+  private val pending =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[DataFrame, Pending]())
+
+  /** One sequential rename through the composition memo. */
+  private def rename(df: DataFrame, kind: Kind): DataFrame = {
+    val p = Option(pending.get(df)).filterNot(_.renames.exists(_._1 == kind))
+      .getOrElse(Pending(df, census(df), Vector.empty))
+    val next = p.copy(renames = p.renames :+ (kind -> p.census.getOrElse(kind, kindDict(p.source, kind))))
+    val out = rewrite(next.source, next.renames)
+    // a rewrite with nothing to rename returns the source itself, which
+    // must not become a key its own pending state holds on to
+    if (!(out eq next.source)) pending.put(out, next)
+    out
   }
 
   /** `--rename-schemas` (`jsonl_process.py:133-136`): one dictionary,
@@ -337,18 +470,16 @@ object JsonlProcess {
     * of 3-part table names.
     */
   def renameSchemas(df: DataFrame, hashTokens: Boolean = false): DataFrame =
-    applyDict(df,
-      sharedDict(df, i => get_json_object(i, "$.schema"), 1, "schema", hashTokens),
-      "schema", 1)
+    if (hashTokens) rewrite(df, Seq(Schemas -> sharedDict(df, Schemas, hashTokens)))
+    else rename(df, Schemas)
 
   /** `--rename-catalogs` (`jsonl_process.py:138-140`): one dictionary over
     * the catalog/connector occurrences — inputs' `connectorId` field + the
     * first segment of 3-part table names.
     */
   def renameCatalogs(df: DataFrame, hashTokens: Boolean = false): DataFrame =
-    applyDict(df,
-      sharedDict(df, i => get_json_object(i, "$.connectorId"), 0, "catalog", hashTokens),
-      "connectorId", 0)
+    if (hashTokens) rewrite(df, Seq(Catalogs -> sharedDict(df, Catalogs, hashTokens)))
+    else rename(df, Catalogs)
 
   /** `--remove-locations` (`jsonl_process.py:142-145`): blank the values
     * of `location`/`targetPath`/`writePath` keys. The raw `inputs`
@@ -377,5 +508,6 @@ object JsonlProcess {
     * the reference; the summary schema carries only `user`).
     */
   def renameUsers(df: DataFrame, hashTokens: Boolean = false): DataFrame =
-    obfuscateColumn(df, "user", "user", hashTokens)
+    if (hashTokens) obfuscateColumn(df, "user", "user", hashTokens)
+    else rename(df, Users)
 }

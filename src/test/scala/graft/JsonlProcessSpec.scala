@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructType}
+import graft.ingest.{Extract, QueryInfoCorpus}
 import graft.process.JsonlProcess
 
 /** A13-A15: schema filter + deterministic dictionary obfuscation. */
@@ -400,5 +403,142 @@ class JsonlProcessSpec extends SparkSpec {
         JsonlProcess.obfuscateArrayColumn(arr, "ids", "part").collect())
       assert(a.getMessage.contains("array dictionary"))
     } finally spark.conf.unset("spark.graft.maxDictNames")
+  }
+
+  // ---- composition of the sequential renames --------------------------
+
+  private val noPlan = expr(
+    "CAST(array() AS array<struct<fragment_id:string,fragment_idx:int," +
+      "node_id:string,node_type:string,parent_id:string,depth:int," +
+      "dfs_order:int,subtree_end:int,table_name:string," +
+      "deepest_table:string,join_type:string,join_distribution:string," +
+      "has_criteria:boolean>>)")
+
+  /** users → schemas → catalogs → locations → query as sorted JSON rows;
+    * `fresh` puts a `select("*")` before every call, so no rename sees the
+    * frame an earlier one returned.
+    */
+  private def chain(d: DataFrame, fresh: Boolean): Seq[String] = {
+    val steps: Seq[DataFrame => DataFrame] = Seq(JsonlProcess.renameUsers(_),
+      JsonlProcess.renameSchemas(_), JsonlProcess.renameCatalogs(_),
+      JsonlProcess.removeLocations, JsonlProcess.removeQuery)
+    steps.foldLeft(d)((acc, step) => step(if (fresh) acc.select("*") else acc))
+      .toJSON.collect().sorted.toSeq
+  }
+
+  test("fused renames equal the one-by-one chain on the gate fixture") {
+    val fused = chain(workload, fresh = false)
+    assert(fused.size === workload.count())
+    assert(fused === chain(workload, fresh = true))
+    assert(!fused.exists(r => r.contains("alice") || r.contains("hive.web")))
+  }
+
+  test("fused renames equal the one-by-one chain on a 540-document corpus window") {
+    val tmp = java.nio.file.Files.createTempDirectory("jsonl_corpus")
+    val raw = java.nio.file.Files.createDirectory(tmp.resolve("raw"))
+    (9000 until 9540).foreach(i => java.nio.file.Files.writeString(
+      raw.resolve(s"q$i.json"), QueryInfoCorpus.documentBytes(i.toLong)))
+    Extract.writeParquet(Extract.extract(spark, raw.toString), s"$tmp/summary")
+    val summaries = spark.read.parquet(s"$tmp/summary")
+    val fused = chain(summaries, fresh = false)
+    assert(fused.size >= 500)
+    assert(fused === chain(summaries, fresh = true))
+  }
+
+  test("a filter between two renames makes the second take its own census") {
+    val g1 = "20220301_080000_00001_graft"
+    val out = JsonlProcess.renameSchemas(
+      JsonlProcess.renameUsers(workload).filter(col("query_id") =!= g1))
+    val tok = out.select(col("query_id"), explode(col("inputs")).as("i"))
+      .select(col("query_id"), get_json_object(col("i"), "$.schema"))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    // first seen over the kept rows: g2 sales, g3 raw, g4 web (the
+    // unfiltered order would give web → schema0, sales → schema1)
+    assert(tok("20220301_110000_00002_graft") === "schema0")
+    assert(tok("20220301_110500_00003_graft") === "schema1")
+    assert(tok("20220301_140000_00004_graft") === "schema2")
+    // the user renames from before the filter are kept
+    assert(out.select("user").distinct().collect().forall(_.getString(0).startsWith("user")))
+  }
+
+  test("a kind over the bound fails only the rename that asks for it") {
+    val d = Seq(
+      ("q1", "alice", Seq("""{"connectorId":"hive","schema":"web","table":"t"}""")),
+      ("q2", "bob", Seq("""{"connectorId":"hive","schema":"sales","table":"t"}""")),
+      ("q3", "carol", Seq("""{"connectorId":"hive","schema":"web","table":"u"}""")))
+      .toDF("query_id", "user", "inputs")
+      .withColumn("plan_nodes", noPlan)
+    spark.conf.set("spark.graft.maxDictNames", "2")
+    try {
+      // three users are over the bound; the two schemas and one catalog are not
+      val schemas = JsonlProcess.renameSchemas(d)
+      assert(schemas.select(explode(col("inputs"))).collect().map(_.getString(0)).toSeq ===
+        Seq("""{"connectorId":"hive","schema":"schema0","table":"t"}""",
+          """{"connectorId":"hive","schema":"schema1","table":"t"}""",
+          """{"connectorId":"hive","schema":"schema0","table":"u"}"""))
+      val both = JsonlProcess.renameCatalogs(schemas)
+      assert(both.select(explode(col("inputs"))).collect()
+        .forall(_.getString(0).contains(""""connectorId":"catalog0"""")))
+      val e = intercept[IllegalArgumentException](JsonlProcess.renameUsers(both))
+      assert(e.getMessage.contains("user dictionary: more than 2 distinct names"))
+    } finally spark.conf.unset("spark.graft.maxDictNames")
+  }
+
+  test("the plan_nodes rewrite keeps every field, its type and its place") {
+    def fields(d: DataFrame) = d.schema("plan_nodes").dataType.asInstanceOf[ArrayType]
+      .elementType.asInstanceOf[StructType].fields.map(f => f.name -> f.dataType).toSeq
+    val out = JsonlProcess.renameCatalogs(JsonlProcess.renameSchemas(workload))
+    assert(fields(out) === fields(workload))
+    assert(out.columns.toSeq === workload.columns.toSeq)
+    // a field the summary schema does not know yet survives too
+    val wider = workload.withColumn("plan_nodes",
+      transform(col("plan_nodes"), n => n.withField("extra", lit(7))))
+    val renamed = JsonlProcess.renameSchemas(wider)
+    assert(fields(renamed) === fields(wider))
+    assert(renamed.select(explode(col("plan_nodes.extra"))).distinct()
+      .collect().map(_.getInt(0)).toSeq === Seq(7))
+  }
+
+  test("a bucketed dictionary looks names up like a plain Map, misses pass through") {
+    val dict = (0 until 5000).map(i => s"name$i" -> s"tok$i").toMap
+    val names = (0 until 5000 by 3).map(i => Option(s"name$i")) ++
+      Seq(Some("name5000"), Some(""), Some("missing"), None)
+    val d = names.toDF("n")
+    val looked = d.select(col("n"), JsonlProcess.lookup(dict)(col("n")).as("t"))
+    val out = looked.collect().map(r => Option(r.getString(0)) -> Option(r.getString(1)))
+    assert(out.length === names.size)
+    out.foreach { case (n, t) => assert(t === n.map(x => dict.getOrElse(x, x)), n) }
+    assert(looked.queryExecution.analyzed.toString.contains("xxhash64"))
+    // a one-bucket dictionary stays a single map literal with no hash call
+    val small = d.select(JsonlProcess.lookup(dict.take(64))(col("n")))
+    assert(!small.queryExecution.analyzed.toString.contains("xxhash64"))
+  }
+
+  test("users → schemas → catalogs → write.json submits at most four jobs") {
+    // one census job (two with its shuffle stage) and the write; one
+    // dictionary collect per rename would be at least seven
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Files.createTempDirectory("jsonl_jobs")
+    workload.write.parquet(s"$tmp/summary")
+    val in = spark.read.parquet(s"$tmp/summary")
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup("jsonl-process-spec", "process job count")
+    try {
+      JsonlProcess.renameCatalogs(JsonlProcess.renameSchemas(JsonlProcess.renameUsers(in)))
+        .write.json(s"$tmp/processed")
+      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+    val jobs = groups.asScala.count(_ == "jsonl-process-spec")
+    info(s"$jobs process jobs")
+    assert(jobs <= 4, s"$jobs process jobs, more than 4")
   }
 }
