@@ -2,9 +2,8 @@ package graft.process
 
 import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.unsafe.types.UTF8String
 import com.fasterxml.jackson.core.io.JsonStringEncoder
 
 /** Stage 2.5 (reference `jsonl_process.py`): schema filtering + name
@@ -20,15 +19,16 @@ import com.fasterxml.jackson.core.io.JsonStringEncoder
   * Composition contract: the per-flag renames [[renameUsers]],
   * [[renameSchemas]] and [[renameCatalogs]] compose. The first of them on
   * a frame collects every user, schema and catalog dictionary the frame's
-  * columns carry in one job; applying another to the frame it returned
-  * reuses those dictionaries and rebuilds the result from the original
-  * frame in one projection, so a chain of the three costs one dictionary
-  * job and one rewrite of `inputs` and `plan_nodes`. The result equals
-  * the one-by-one chain. Any other frame starts fresh: one that was
-  * filtered, re-selected or otherwise derived, one that went through
-  * [[removeLocations]], [[removeQuery]], hash-token mode or
-  * [[obfuscateArrayColumn]] (these stack on top, uncomposed), and one
-  * that already carries the rename asked for.
+  * columns carry in one collect, bounded per kind; applying another to
+  * the frame it returned reuses those dictionaries and rebuilds the result
+  * from the original frame in one projection, so a chain of the three
+  * costs one dictionary collect and one rewrite of `inputs` and
+  * `plan_nodes`. The result equals the one-by-one chain. Any other frame
+  * starts fresh: one that was filtered, re-selected or otherwise derived,
+  * one that went through [[removeLocations]], [[removeQuery]], hash-token
+  * mode or [[obfuscateArrayColumn]] (these stack on top, uncomposed), one
+  * whose first rename could not read the carrier of the kind now asked
+  * for, and one that already carries the rename asked for.
   *
   * First-seen-order encoding (`NameObfuscator`, `jsonl_process.py:53-76`)
   * is order-dependent in the reference (file iteration order); here it is
@@ -98,13 +98,13 @@ object JsonlProcess {
   //
   // Default tokens are the reference contract: `prefix0, prefix1, …` in
   // first-seen order (`NameObfuscator`, `jsonl_process.py:53-61`). A
-  // sequential dictionary is a bounded collect of the distinct names sorted
-  // by (first_seen, old_name) in Spark, numbered on the driver and applied
-  // as a hashed map-literal lookup ([[lookup]]) in a narrow projection. The
-  // user, schema and catalog dictionaries of one frame share a single
-  // collect, the census (see "composition" below); the array dictionary
-  // and every per-kind fallback go through [[firstSeenDict]] alone. The
-  // opt-in HASH mode (`--hash-tokens`) trades the sequential numbering for
+  // sequential dictionary is a bounded collect of the distinct names
+  // ordered by (first_seen, old_name) in Spark, numbered on the driver and
+  // applied as a map-literal lookup ([[lookup]]) in a narrow projection.
+  // The user, schema and catalog dictionaries of one frame share a single
+  // collect, the census (see "composition" below), bounded per kind; the
+  // array dictionary goes through [[firstSeenDict]] alone. The opt-in
+  // HASH mode (`--hash-tokens`) trades the sequential numbering for
   // `prefix` + 16-hex md5 prefix of the name — for users and arrays a pure
   // narrow map with no dictionary at all — for corpora whose name
   // cardinality is too large to hold on the driver (64-bit tokens:
@@ -123,76 +123,41 @@ object JsonlProcess {
   private def numbered(names: Seq[String], prefix: String): Map[String, String] =
     names.zipWithIndex.map { case (n, i) => n -> s"$prefix$i" }.toMap
 
-  /** The one sequential dictionary: `(old_name, first_seen)` rows, one per
-    * distinct name → `prefix0, prefix1, …` in `(first_seen, old_name)`
-    * order. Collected to the driver through [[collectBounded]]: obfuscation
-    * dictionaries are catalog-metadata-sized by nature (like the IVF
-    * centroids), and shipping them as plan literals makes every rewrite an
-    * in-place projection — no join, no explode/regroup, so duplicate
-    * query_ids can never merge rows and a null or empty array keeps its
-    * identity. `old_name` is distinct, so the numbering is exactly a dense
-    * rank over the first-seen order.
+  /** A sequential dictionary on its own (the array rename's):
+    * `(old_name, first_seen)` rows, one per distinct name → `prefix0,
+    * prefix1, …` in `(first_seen, old_name)` order. Collected to the
+    * driver through [[collectBounded]]: obfuscation dictionaries are
+    * catalog-metadata-sized by nature (like the IVF centroids), and
+    * shipping them as plan literals makes every rewrite an in-place
+    * projection — no join, no explode/regroup, so duplicate query_ids can
+    * never merge rows and a null or empty array keeps its identity.
+    * `old_name` is distinct, so the numbering is exactly a dense rank over
+    * the first-seen order.
     */
   private def firstSeenDict(names: DataFrame, prefix: String,
       what: String): Map[String, String] =
     numbered(collectBounded(names.orderBy(col("first_seen"), col("old_name")),
         maxDictNames(names.sparkSession), what).map(_.getString(0)).toSeq, prefix)
 
-  /** Names per hash bucket of a bucketed [[probe]]. */
-  private val BucketNames = 64
-
   /** `c` looked up in `dict`: the value, or null on a miss ('' and null
     * included). try_element_at, not element_at: under ANSI (Spark 4
-    * default) a miss on a map THROWS, and misses are normal here. Spark
-    * looks a map literal up by a scan of its keys, so a dictionary past
-    * [[BucketNames]] names is split into buckets of at most that many,
-    * one small map literal each inside one array literal, and the bucket
-    * is picked by `pmod(xxhash64(name), nBuckets)` (the driver hashes
-    * with the same function and seed): the per-row cost stays flat in the
-    * dictionary size. A one-bucket dictionary stays a single map literal
-    * with no hash call.
+    * default) a miss on a map THROWS, and misses are normal here. The
+    * lookup scans the map literal's keys, so its per-row cost grows with
+    * the dictionary: past some thousands of names `--hash-tokens` is the
+    * cheaper mode.
     */
-  private def probe[V: TypeTag](dict: Map[String, V]): Column => Column =
-    if (dict.size <= BucketNames) {
-      val m = typedLit(dict)
-      c => try_element_at(m, c)
-    } else {
-      def bucket(name: String, n: Int): Int = Math.floorMod(
-        XXH64.hashUTF8String(UTF8String.fromString(name), 42L), n.toLong).toInt
-      // twice the bucket count the dictionary needs on average, doubled
-      // again until no bucket holds more than BucketNames
-      val (n, buckets) = Iterator.iterate(2 * ((dict.size - 1) / BucketNames + 1))(_ * 2)
-        .map(n => n -> dict.groupBy { case (k, _) => bucket(k, n) })
-        .find(_._2.valuesIterator.forall(_.size <= BucketNames)).get
-      val arr = typedLit((0 until n).map(b => buckets.getOrElse(b, Map.empty[String, V])))
-      c => try_element_at(element_at(arr, (pmod(xxhash64(c), lit(n.toLong)) + 1).cast("int")), c)
-    }
+  private def probe[V: TypeTag](dict: Map[String, V]): Column => Column = {
+    val m = typedLit(dict)
+    c => try_element_at(m, c)
+  }
 
   /** `c` through `dict`; names outside it — '' and null included — pass
     * through.
     */
-  private[graft] def lookup(dict: Map[String, String]): Column => Column = {
+  private def lookup(dict: Map[String, String]): Column => Column = {
     val hit = probe(dict)
     c => coalesce(hit(c), c)
   }
-
-  /** `(old_name, first_seen)` of the non-empty values of `column`. */
-  private def columnNames(df: DataFrame, column: String): DataFrame =
-    df.filter(col(column).isNotNull && col(column) =!= "")
-      .groupBy(col(column).as("old_name"))
-      .agg(min(col("query_id")).as("first_seen"))
-
-  /** A14/A15: replace `column` values by their first-seen (min query_id)
-    * tokens ('' passes through unchanged, matching
-    * `NameObfuscator.__call__`'s `''` guard).
-    */
-  def obfuscateColumn(df: DataFrame, column: String, prefix: String,
-      hashTokens: Boolean = false): DataFrame =
-    if (hashTokens)
-      df.withColumn(column, hashToken(col(column), prefix))
-    else
-      df.withColumn(column, lookup(firstSeenDict(columnNames(df, column), prefix,
-        s"$prefix dictionary"))(col(column)))
 
   /** `ListObfuscator` (`jsonl_process.py:68-76`): obfuscate every element
     * of an array<string> column through ONE shared dictionary (the
@@ -269,34 +234,33 @@ object JsonlProcess {
     v
   }
 
-  /** At most `bound` rows of `names`, or None when it has more — one extra
-    * row is fetched as the overflow sentinel, so the check costs no second
-    * aggregation pass and never materializes an unbounded result on the
-    * driver.
+  /** Fails loud when a dictionary of `n` names is past `bound`. `escape`
+    * names the caller-appropriate way out (the normalized path has
+    * `--hash-tokens`; the raw path points at it).
     */
-  private def collectWithin(names: DataFrame, bound: Long): Option[Array[Row]] = {
-    val rows = names.limit(bound.toInt + 1).collect()
-    if (rows.length <= bound) Some(rows) else None
-  }
-
-  /** Collect at most `bound` dictionary rows, failing loud past it.
-    * Shared with [[RawProcess.buildDictionaries]] (round 13): ONE
-    * definition guards every dictionary collect in the repo, so neither
-    * obfuscation path can regress to an unbounded driver materialization.
-    * `escape` names the caller-appropriate way out (the normalized path
-    * has `--hash-tokens`; the raw path points at it).
-    */
-  private[process] def collectBounded(names: DataFrame, bound: Long,
-      what: String,
-      escape: String = "Use --hash-tokens (pure-function tokens, no total-order sort)")
-      : Array[Row] = {
-    val rows = collectWithin(names, bound)
-    require(rows.isDefined,
+  private def requireWithin(n: Long, bound: Long, what: String,
+      escape: String = HashTokensEscape): Unit =
+    require(n <= bound,
       s"$what: more than $bound distinct names — this dictionary is no " +
         "longer catalog-metadata-sized and would exhaust driver memory. " +
         s"$escape, " +
         "raise spark.graft.maxDictNames deliberately, or pre-filter the corpus.")
-    rows.get
+
+  private val HashTokensEscape =
+    "Use --hash-tokens (pure-function tokens, no total-order sort)"
+
+  /** Collect at most `bound` dictionary rows — one extra row is fetched
+    * as the overflow sentinel, so the guard costs no second aggregation
+    * pass and never materializes an unbounded result on the driver.
+    * Shared with [[RawProcess.buildDictionaries]] (round 13): ONE
+    * definition guards every dictionary collect in the repo, so neither
+    * obfuscation path can regress to an unbounded driver materialization.
+    */
+  private[process] def collectBounded(names: DataFrame, bound: Long,
+      what: String, escape: String = HashTokensEscape): Array[Row] = {
+    val rows = names.limit(bound.toInt + 1).collect()
+    requireWithin(rows.length, bound, what, escape)
+    rows
   }
 
   /** One sequential rename kind: its token prefix (also its census tag and
@@ -327,64 +291,51 @@ object JsonlProcess {
     fromInputs.unionAll(fromNodes)
   }
 
-  /** The schema or catalog dictionary on its own (the per-kind path):
-    * `(old_name, first_seen)` over both carriers, one bounded collect.
+  /** The hash-mode schema or catalog dictionary: every name over both
+    * carriers → `prefix` + 16-hex md5, the SAME derivation (engine md5)
+    * as [[hashToken]], computed in the aggregation job; no first-seen
+    * ordering anywhere. The dictionary is still collected (the rewrite
+    * applies both nested carriers from a map literal), so hash mode
+    * removes the total-order sort but keeps the catalog-metadata-sized
+    * driver map.
     */
-  private def sharedDict(df: DataFrame, kind: Kind,
-      hashTokens: Boolean = false): Map[String, String] = {
-    val names = segmentNames(df).select(col("query_id"), col(kind.prefix).as("old_name"))
-      .filter(col("old_name").isNotNull && col("old_name") =!= "")
-      .groupBy(col("old_name")).agg(min(col("query_id")).as("first_seen"))
-    // hash mode: tokens are a pure function of the name — SAME derivation
-    // (engine md5, 16 hex chars) as hashToken above, computed in the same
-    // aggregation job; no first-seen ordering anywhere. The dictionary is
-    // still collected (the rewrite applies both nested carriers from a map
-    // literal), so hash mode removes the total-order sort but keeps the
-    // catalog-metadata-sized driver map.
-    if (hashTokens)
-      collectBounded(names.select(col("old_name"), hashToken(col("old_name"), kind.prefix)),
-          maxDictNames(df.sparkSession), s"${kind.prefix} dictionary (hash mode)")
-        .map(r => r.getString(0) -> r.getString(1))
-        .toMap
-    else firstSeenDict(names, kind.prefix, s"${kind.prefix} dictionary")
-  }
+  private def hashDict(df: DataFrame, kind: Kind): Map[String, String] =
+    collectBounded(segmentNames(df).select(col(kind.prefix).as("old_name"))
+        .filter(col("old_name").isNotNull && col("old_name") =!= "").distinct()
+        .select(col("old_name"), hashToken(col("old_name"), kind.prefix)),
+        maxDictNames(df.sparkSession), s"${kind.prefix} dictionary (hash mode)")
+      .map(r => r.getString(0) -> r.getString(1))
+      .toMap
 
-  /** The per-kind dictionary of a sequential rename. */
-  private def kindDict(df: DataFrame, kind: Kind): Map[String, String] =
-    if (kind == Users) firstSeenDict(columnNames(df, "user"), "user", "user dictionary")
-    else sharedDict(df, kind)
-
-  /** Every sequential dictionary whose carriers `df` has, from one tagged
-    * aggregation and one collect of at most (kinds × maxDictNames) rows,
-    * sorted by (kind, first_seen, old_name) in Spark. A kind over its
-    * bound is left out, and so is every kind when the collect is
-    * truncated: the caller then takes the per-kind path, which raises the
-    * guard error only if that kind is asked for.
+  /** The names of the kind `asked` and of every other kind whose carrier
+    * columns `df` has, from one tagged aggregation and one collect, each
+    * kind's in `(first_seen, old_name)` order. A window numbers each
+    * kind's names in Spark and keeps at most `bound + 1` of them, so the
+    * driver never holds more than that of one kind, and a kind past its
+    * bound fails only the rename that asks for it ([[rename]]). Without
+    * its carrier, `asked` fails here with Spark's own analysis error.
     */
-  private def census(df: DataFrame): Map[Kind, Map[String, String]] = {
+  private def census(df: DataFrame, asked: Kind, bound: Long): Map[Kind, Seq[String]] = {
     val has = df.columns.toSet
-    val users = if (has("user")) Seq(Users) else Nil
-    val segments = if (has("inputs") && has("plan_nodes")) Seq(Schemas, Catalogs) else Nil
-    val kinds = users ++ segments
-    if (!has("query_id") || kinds.isEmpty) return Map.empty
+    val users = if (asked == Users || has("user")) Seq(Users) else Nil
+    val segments =
+      if (asked != Users || (has("inputs") && has("plan_nodes"))) Seq(Schemas, Catalogs) else Nil
     val tagged = (
       users.map(k => df.select(col("query_id"), lit(k.prefix).as("kind"), col("user").as("old_name"))) ++
       (if (segments.isEmpty) Nil
        else Seq(segmentNames(df).unpivot(Array(col("query_id")),
          segments.map(k => col(k.prefix)).toArray, "kind", "old_name")))
     ).reduce(_ unionAll _)
-    val names = tagged.filter(col("old_name").isNotNull && col("old_name") =!= "")
+    val rows = tagged.filter(col("old_name").isNotNull && col("old_name") =!= "")
       .groupBy(col("kind"), col("old_name")).agg(min(col("query_id")).as("first_seen"))
-      .orderBy(col("kind"), col("first_seen"), col("old_name"))
-    val max = maxDictNames(df.sparkSession)
-    collectWithin(names, math.min(kinds.size * max, Int.MaxValue - 1L)).fold(
-      Map.empty[Kind, Map[String, String]]) { rows =>
-      val byKind = rows.groupBy(_.getString(0))
-      kinds.flatMap { k =>
-        val ks = byKind.getOrElse(k.prefix, Array.empty[Row])
-        if (ks.length > max) None else Some(k -> numbered(ks.map(_.getString(1)).toSeq, k.prefix))
-      }.toMap
-    }
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("kind")).orderBy(col("first_seen"), col("old_name"))))
+      .filter(col("rank") <= bound + 1)
+      .select(col("kind"), col("old_name"), col("rank"))
+      .collect()
+    val byKind = rows.groupBy(_.getString(0))
+    (users ++ segments).map(k => k -> byKind.getOrElse(k.prefix, Array.empty[Row])
+      .sortBy(_.getInt(2)).map(_.getString(1)).toSeq).toMap
   }
 
   /** Every rename of `dicts` (at most one per kind, in call order) over
@@ -432,7 +383,6 @@ object JsonlProcess {
     if (columns.isEmpty) df else df.withColumns(columns.toMap)
   }
 
-
   // ---- composition of the sequential renames -------------------------
   //
   // The reference makes one sequential pass per line through shared
@@ -446,18 +396,23 @@ object JsonlProcess {
   // rewrite replaces only the `"key":"…"` pair, so every dictionary reads
   // the same names from the source as from an earlier rename's output.
 
-  private final case class Pending(source: DataFrame,
-      census: Map[Kind, Map[String, String]],
-      renames: Vector[(Kind, Map[String, String])])
+  private final case class Pending(source: DataFrame, bound: Long,
+      census: Map[Kind, Seq[String]], renames: Vector[(Kind, Map[String, String])])
 
   private val pending =
     java.util.Collections.synchronizedMap(new java.util.WeakHashMap[DataFrame, Pending]())
 
   /** One sequential rename through the composition memo. */
   private def rename(df: DataFrame, kind: Kind): DataFrame = {
-    val p = Option(pending.get(df)).filterNot(_.renames.exists(_._1 == kind))
-      .getOrElse(Pending(df, census(df), Vector.empty))
-    val next = p.copy(renames = p.renames :+ (kind -> p.census.getOrElse(kind, kindDict(p.source, kind))))
+    val p = Option(pending.get(df))
+      .filter(p => p.census.contains(kind) && !p.renames.exists(_._1 == kind))
+      .getOrElse {
+        val bound = maxDictNames(df.sparkSession)
+        Pending(df, bound, census(df, kind, bound), Vector.empty)
+      }
+    val names = p.census(kind)
+    requireWithin(names.size, p.bound, s"${kind.prefix} dictionary")
+    val next = p.copy(renames = p.renames :+ (kind -> numbered(names, kind.prefix)))
     val out = rewrite(next.source, next.renames)
     // a rewrite with nothing to rename returns the source itself, which
     // must not become a key its own pending state holds on to
@@ -470,7 +425,7 @@ object JsonlProcess {
     * of 3-part table names.
     */
   def renameSchemas(df: DataFrame, hashTokens: Boolean = false): DataFrame =
-    if (hashTokens) rewrite(df, Seq(Schemas -> sharedDict(df, Schemas, hashTokens)))
+    if (hashTokens) rewrite(df, Seq(Schemas -> hashDict(df, Schemas)))
     else rename(df, Schemas)
 
   /** `--rename-catalogs` (`jsonl_process.py:138-140`): one dictionary over
@@ -478,7 +433,7 @@ object JsonlProcess {
     * first segment of 3-part table names.
     */
   def renameCatalogs(df: DataFrame, hashTokens: Boolean = false): DataFrame =
-    if (hashTokens) rewrite(df, Seq(Catalogs -> sharedDict(df, Catalogs, hashTokens)))
+    if (hashTokens) rewrite(df, Seq(Catalogs -> hashDict(df, Catalogs)))
     else rename(df, Catalogs)
 
   /** `--remove-locations` (`jsonl_process.py:142-145`): blank the values
@@ -508,6 +463,6 @@ object JsonlProcess {
     * the reference; the summary schema carries only `user`).
     */
   def renameUsers(df: DataFrame, hashTokens: Boolean = false): DataFrame =
-    if (hashTokens) obfuscateColumn(df, "user", "user", hashTokens)
+    if (hashTokens) df.withColumn("user", hashToken(col("user"), "user"))
     else rename(df, Users)
 }
